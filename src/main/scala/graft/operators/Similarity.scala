@@ -798,25 +798,25 @@ object Similarity {
                   vecCol: String = "embedding",
                   idCol: String = "vec_id"): IvfPqIndex =
     index.copy(encoded = index.encoded.unionByName(
-      ivfPqEncodeFrozen(index, newVecs, vecCol, idCol)))
+      ivfPqEncodeFrozen(index.coarse, index.cb, newVecs, vecCol, idCol)))
 
   /** Assign + encode a batch under an index's FROZEN codebooks — the
     * shared encode of [[ivfPqAppend]] (in-memory) and
     * [[ivfPqAppendSave]] (on-disk): no Lloyd's, row-local arithmetic
     * only, one (id, __list, codes) row per new vector. */
-  private[graft] def ivfPqEncodeFrozen(index: IvfPqIndex,
+  private[graft] def ivfPqEncodeFrozen(coarse: Array[Array[Long]],
+                                       cb: PqCodebook,
                                        newVecs: DataFrame,
                                        vecCol: String,
                                        idCol: String): DataFrame = {
-    val dim = index.coarse.head.length
-    val coarseLit = typedLit(index.coarse.map(_.toSeq).toSeq)
-    dimGuard(
-        quantizedUnits(newVecs, vecCol, idCol, index.cb.unitScale), dim)
-      .withColumn("__list", pqAssign(col("__xu"), 0, dim, index.coarse))
+    val dim = coarse.head.length
+    val coarseLit = typedLit(coarse.map(_.toSeq).toSeq)
+    dimGuard(quantizedUnits(newVecs, vecCol, idCol, cb.unitScale), dim)
+      .withColumn("__list", pqAssign(col("__xu"), 0, dim, coarse))
       .withColumn("__ru", zip_with(col("__xu"),
         element_at(coarseLit, col("__list") + 1), (a, b) => a - b))
       .select(col("__id").as(idCol), col("__list"),
-        pqCodesCol(col("__ru"), index.cb).as("codes"))
+        pqCodesCol(col("__ru"), cb).as("codes"))
   }
 
   /** Append a batch to a SAVED index in place — [[ivfPqAppend]]'s
@@ -850,10 +850,10 @@ object Similarity {
                       idCol: String = "vec_id"): Unit = {
     // load + plan BEFORE the sentinel: a load/analysis failure (torn
     // store, retired store, schema mismatch) surfaces its own message
-    // without holding the sentinel; ivfPqLoad itself rejects an
+    // without holding the sentinel; the codebook load itself rejects an
     // existing sentinel, so a second writer stops here
-    val encoded =
-      ivfPqEncodeFrozen(ivfPqLoad(spark, path), newVecs, vecCol, idCol)
+    val (coarse, cb, _) = ivfPqCodebooks(spark, path)
+    val encoded = ivfPqEncodeFrozen(coarse, cb, newVecs, vecCol, idCol)
     val pending = appendPendingSentinel(path)
     require(pending.createNewFile(),
       s"index at $path has an in-flight or torn append " +
@@ -1022,9 +1022,32 @@ object Similarity {
     * compacted successor) and on an in-flight or torn
     * [[ivfPqAppendSave]] (the `.append-pending` sentinel: the encoded
     * table may hold a partial batch and must never be served
-    * silently). */
+    * silently). Each load opens the `encoded` table afresh (a file
+    * listing plus a parquet schema pass); the serving view
+    * [[graft.streaming.VectorIndexSink.read]] instead keeps each opened
+    * arm, this table included, across probe batches while its files
+    * are unchanged. */
   def ivfPqLoad(spark: org.apache.spark.sql.SparkSession,
                 path: String): IvfPqIndex = {
+    val (coarse, cb, nLists) = ivfPqCodebooks(spark, path)
+    IvfPqIndex(spark.read.parquet(s"$path/encoded"), coarse, cb, nLists)
+  }
+
+  /** The codebook half of [[ivfPqLoad]] — (coarse centroids, residual
+    * codebook, nLists) with the same retired and torn-append checks,
+    * and no access to the `encoded` table at all: the append paths
+    * encode under the frozen codebooks and never need it.
+    *
+    * The three bounded driver collects (meta, coarse, codebook) are
+    * three Spark jobs per load — pure per-trigger overhead for a
+    * streaming appender that loads the SAME frozen codebooks every
+    * batch (appendBatch/runCdc). They are cached keyed by a driver-side
+    * file fingerprint ([[graft.streaming.StoreFiles.fingerprint]] of
+    * the three dirs): any rewrite — retrain, compact, hand edit —
+    * changes part-file names and misses, falling back to the real
+    * collects. */
+  private[graft] def ivfPqCodebooks(spark: org.apache.spark.sql.SparkSession,
+      path: String): (Array[Array[Long]], PqCodebook, Int) = {
     graft.streaming.StoreFiles.requireNotRetired(path, "vector index")
     val pending = appendPendingSentinel(path)
     if (pending.exists()) throw new IllegalStateException(
@@ -1032,18 +1055,11 @@ object Similarity {
         s"(${pending.getName} present) - wait for the writer, or " +
         "verify/rebuild the encoded table after a crash, then remove " +
         "the sentinel")
-    // the three bounded driver collects (meta, coarse, codebook) are
-    // three Spark jobs per load — pure per-trigger overhead for a
-    // streaming appender that loads the SAME frozen codebooks every
-    // batch (appendBatch/runCdc). Cache them keyed by a driver-side
-    // file fingerprint (name + length + mtime of every codebook file):
-    // any rewrite — retrain, compact, hand edit — changes part-file
-    // names and misses, falling back to the real collects. The encoded
-    // table is NOT cached (it grows with every append); each load
-    // returns a fresh lazy scan of it.
-    val key = try new java.io.File(path).getCanonicalPath
-      catch { case _: java.io.IOException => path }
-    val fp = codebookFingerprint(path)
+    val key = graft.streaming.StoreFiles.cacheKey(path)
+    val fp = Seq("meta", "coarse", "codebook")
+      .map(d => graft.streaming.StoreFiles.fingerprint(
+        new java.io.File(path, d)))
+      .filter(_.nonEmpty).mkString("\n")
     // an EMPTY fingerprint means the listing saw nothing — a non-local
     // path (hdfs://, s3a://) or an unreadable dir, where
     // spark.read.parquet could still succeed. Treat it as UNCACHEABLE
@@ -1053,7 +1069,7 @@ object Similarity {
     val cached =
       if (cacheable) Option(codebookCache.get(key)).filter(_._1 == fp)
       else None
-    val (coarse, cb, nLists) = cached match {
+    cached match {
       case Some((_, c, b, n)) => (c, b, n)
       case None =>
         val meta = spark.read.parquet(s"$path/meta").collect().head
@@ -1074,19 +1090,12 @@ object Similarity {
         if (cacheable) codebookCache.put(key, (fp, c, b, nL))
         (c, b, nL)
     }
-    IvfPqIndex(spark.read.parquet(s"$path/encoded"), coarse, cb, nLists)
   }
 
-  /** See [[ivfPqLoad]]'s caching note. The fingerprint covers exactly
-    * the files the cached collects would read. */
+  /** See [[ivfPqCodebooks]]' caching note. The fingerprint covers
+    * exactly the files the cached collects would read. */
   private val codebookCache = new java.util.concurrent.ConcurrentHashMap[
     String, (String, Array[Array[Long]], PqCodebook, Int)]()
-  private def codebookFingerprint(path: String): String =
-    Seq("meta", "coarse", "codebook").flatMap { d =>
-      Option(new java.io.File(path, d).listFiles())
-        .getOrElse(Array.empty[java.io.File]).toSeq
-        .map(f => s"$d/${f.getName}:${f.length}:${f.lastModified}")
-    }.sorted.mkString("\n")
 
   /** Persist a PQ index: the code table as parquet (the ~32x-compressed
     * serving artifact) plus the codebook as one (s, j, d, c) long table

@@ -42,8 +42,16 @@ object JsonlStage {
   def write(df: DataFrame, path: String): Unit =
     df.write.mode("overwrite").json(path)
 
-  def read(spark: SparkSession, path: String, spec: TableSpec): DataFrame =
-    spec(spark.read.json(path))
+  /** Spark's JSON writer omits null fields, so a declared column that is
+    * null in every row of a drop is absent from the inferred schema; it
+    * is restored as a null string, and the spec's cast battery types it
+    * like any other value. */
+  def read(spark: SparkSession, path: String, spec: TableSpec): DataFrame = {
+    val df = spark.read.json(path)
+    val present = df.columns.map(_.toLowerCase).toSet
+    spec(df.select(col("*") +: spec.declared.filterNot(present)
+      .map(c => lit(null).cast(StringType).as(c)): _*))
+  }
 }
 
 /** S7/S9/S10/S12 — driver-side paginated extraction: `fetch(pageToken)`

@@ -121,39 +121,19 @@ object RefreshPipeline {
       }
 
     /** Fold trigger `batchId`'s accepted fingerprints into the held
-      * bloom and advance the sequence. The caller passes None when the
-      * trigger accepted NOTHING (it already counted the frame for the
-      * ledger's observed metrics — re-probing emptiness here was one
-      * more per-trigger job, and Spark's bloomFilter aggregate NPEs on
-      * zero rows). Called AFTER the trigger's ledger publish — a
-      * failed trigger leaves the bloom unmerged, so its retry sees
-      * exactly the reference it should. A sequence break is not an
-      * error: the next [[bloomFor]] rebuilds. */
-    def advance(batchId: Long, fps: Option[DataFrame]): Unit =
-      acc match {
-        case Some((b, next)) if next == batchId =>
-          // zero-row guard kept INSIDE advance (Spark's bloomFilter
-          // aggregate NPEs on empty input): a caller passing Some(empty)
-          // merges nothing instead of killing the trigger. Catch-skip
-          // rather than isEmpty so the common non-empty path pays no
-          // extra probe job.
-          fps.foreach { f =>
-            try b.mergeInPlace(f.stat.bloomFilter("__pfp", capacity, fpp))
-            catch { case _: NullPointerException => () }
-          }
-          acc = Some((b, batchId + 1L))
-        case _ => ()
-      }
-
-    /** [[advance]] with the accepted fingerprints already in hand (the
+      * bloom and advance the sequence. The caller has them in hand (the
       * trigger's ledger write observes them — micro-batch bounded, the
-      * single-file ledger contract's size class): `putString` folds
-      * them into the HELD bloom directly. The DataFrame form above
-      * builds a second CAPACITY-sized filter per trigger just to OR a
-      * few hundred members in — at a 10^9-fingerprint corpus that is a
-      * multi-GB allocation per trigger; this is O(batch) work and zero
-      * allocation. putString and the aggregate both hash the UTF-8
-      * bytes, so membership is identical either way. */
+      * single-file ledger contract's size class), so `putString` folds
+      * them into the HELD bloom directly: O(batch) work, no Spark job,
+      * and an empty trigger passes an empty array. Building a second
+      * CAPACITY-sized filter with the bloomFilter aggregate just to OR
+      * a few hundred members in would be a multi-GB allocation per
+      * trigger at a 10^9-fingerprint corpus. putString and the
+      * aggregate both hash the UTF-8 bytes, so membership is identical
+      * either way. Called AFTER the trigger's ledger publish — a failed
+      * trigger leaves the bloom unmerged, so its retry sees exactly the
+      * reference it should. A sequence break is not an error: the next
+      * [[bloomFor]] rebuilds. */
     def advanceWith(batchId: Long, fps: Array[String]): Unit =
       acc match {
         case Some((b, next)) if next == batchId =>
@@ -564,7 +544,7 @@ object RefreshPipeline {
       case None => b0.isEmpty
     }
     if (isEmptyTrigger) {
-      bloomAcc.foreach(_.advance(batchId, None)); return
+      bloomAcc.foreach(_.advanceWith(batchId, Array.empty)); return
     }
     val debug = sys.env.contains("GRAFT_RP_DEBUG")
     def staged[A](label: String)(body: => A): A =

@@ -74,19 +74,6 @@ object ShardSink {
   /** Test hook: drop every cached tail state (simulates a fresh JVM). */
   private[graft] def clearTailCache(): Unit = tailCache.clear()
 
-  /** Content fingerprint of one committed version dir (name + length +
-    * mtime of every file — the [[graft.operators.Similarity]] codebook
-    * discipline): the tail cache's hit condition checks it so an
-    * IN-PLACE mutation of the cached version's dir (hand edit, partial
-    * heal — anything that mutates without adding a version) misses and
-    * takes the full audit instead of packing off stale tails. Empty
-    * (missing or unreadable dir) is UNCACHEABLE: never stored, never
-    * matched. */
-  private def versionDirFingerprint(dir: java.io.File): String =
-    Option(dir.listFiles()).getOrElse(Array.empty[java.io.File])
-      .map(f => s"${f.getName}:${f.length}:${f.lastModified}")
-      .sorted.mkString("\n")
-
   /** Committed version directories under `storeDir`, version order. */
   private def versions(storeDir: String): Seq[(Long, java.io.File)] =
     StoreFiles.publishedDirs(storeDir, "v", StoreFiles.hasParquet)
@@ -317,20 +304,21 @@ object ShardSink {
           "restarted checkpoint lineage needs a fresh store, not an " +
           "interleaved publish into this one")
     val v = version.getOrElse(latestCommitted.map(_ + 1).getOrElse(0L))
-    val cacheKey =
-      try new java.io.File(storeDir).getCanonicalPath
-      catch { case _: java.io.IOException => storeDir }
+    val cacheKey = StoreFiles.cacheKey(storeDir)
     var committedState: TailState = null
     val published = StoreFiles.publishOnce(s"$storeDir/.staging-v$v",
       new java.io.File(s"$storeDir/v$v"), { staging =>
         // tail state: from the cache when this JVM committed the
         // store's latest version under the same (budget, shardCol) —
         // otherwise the full audit + tail fetch over the merged view
-        // (first append, restart, or any external write since)
+        // (first append, restart, or any external write since). The
+        // version dir's fingerprint must match too, so an IN-PLACE
+        // mutation (hand edit, partial heal) misses instead of packing
+        // off stale tails; an empty one is never stored or matched.
         val cached = Option(tailCache.get(cacheKey)).filter(c =>
           latestCommitted.contains(c.version) && c.budget == budget &&
             c.shardCol == shardCol && c.dirFp.nonEmpty &&
-            c.dirFp == versionDirFingerprint(
+            c.dirFp == StoreFiles.fingerprint(
               new java.io.File(s"$storeDir/v${c.version}")))
         val (storeSchema, tails) = cached match {
           case Some(c) => (c.schema, c.tails)
@@ -418,7 +406,7 @@ object ShardSink {
     // rename landed; a skipped re-delivery (published == false) never
     // ran the body and leaves the cache at its pre-trigger state
     if (published && committedState != null) {
-      val fp = versionDirFingerprint(new java.io.File(s"$storeDir/v$v"))
+      val fp = StoreFiles.fingerprint(new java.io.File(s"$storeDir/v$v"))
       if (fp.nonEmpty)
         tailCache.put(cacheKey, committedState.copy(dirFp = fp))
     }

@@ -194,6 +194,29 @@ private[graft] object StoreFiles {
       .map(f => f.getName.drop(prefix.length).toLong -> f)
       .sortBy(_._1).toSeq
 
+  /** Name + length + mtime of every file under `dir`, recursively
+    * (sorted, one `<dir name>/<relative path>:<length>:<mtime>` line
+    * each) — the driver-side change detector the codebook and arm
+    * caches key on. Parquet part-file names carry a per-write UUID, so
+    * any rewrite or in-place append changes it. Empty when nothing can
+    * be listed (a non-local path such as hdfs:// or s3a://, or an
+    * unreadable dir): callers treat that as uncacheable. */
+  def fingerprint(dir: java.io.File): String = {
+    def walk(f: java.io.File, rel: String): Seq[String] =
+      Option(f.listFiles()).fold(Seq.empty[String])(_.toSeq.flatMap { c =>
+        val r = s"$rel/${c.getName}"
+        if (c.isDirectory) walk(c, r)
+        else Seq(s"$r:${c.length}:${c.lastModified}")
+      })
+    walk(dir, dir.getName).sorted.mkString("\n")
+  }
+
+  /** The canonical form of `path`, or `path` itself when it cannot be
+    * resolved — the key of the per-directory driver caches. */
+  def cacheKey(path: String): String =
+    try new java.io.File(path).getCanonicalPath
+    catch { case _: java.io.IOException => path }
+
   def hasParquet(dir: java.io.File): Boolean =
     Option(dir.listFiles()).getOrElse(Array.empty)
       .exists(_.getName.endsWith(".parquet"))

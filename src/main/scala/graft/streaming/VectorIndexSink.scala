@@ -25,8 +25,8 @@ import graft.operators.Similarity
   *    recreating the checkpoint restarts batchIds at 0, so it requires
   *    a fresh index dir (or explicit batch keys via [[appendBatch]]);
   *  - **O(batch) per trigger**: the base table and prior deltas are
-  *    never read on the append path (codebook load is the bounded
-  *    driver collect of ivfPqLoad).
+  *    never read on the append path (codebook load is the bounded,
+  *    cached driver collect of `Similarity.ivfPqCodebooks`).
   *
   * Each delta keeps the `__list` partitioning, so a probe over [[read]]
   * still prunes to its nProbe lists within every delta. Deltas
@@ -254,9 +254,9 @@ object VectorIndexSink {
     if (tieredFloor(indexDir).exists(batchId <= _)) return false
     StoreFiles.publishOnce(s"$indexDir/.staging-b$batchId",
       new java.io.File(s"$indexDir/appends/b$batchId"), { staging =>
-        val idx = Similarity.ivfPqLoad(spark, indexDir) // codebooks
-        // only: `encoded` stays an unexecuted lazy plan on this path
-        Similarity.ivfPqEncodeFrozen(idx, batch, vecCol, idCol)
+        // codebooks only: the append never opens `encoded`
+        val (coarse, cb, _) = Similarity.ivfPqCodebooks(spark, indexDir)
+        Similarity.ivfPqEncodeFrozen(coarse, cb, batch, vecCol, idCol)
           .write.mode("overwrite").partitionBy("__list").parquet(staging)
       })
   }
@@ -302,18 +302,72 @@ object VectorIndexSink {
       })
   }
 
+  // ---- the serving path's arm cache ----
+  //
+  // Opening an arm (`spark.read.parquet`) lists its `__list=` dirs and
+  // runs a parquet schema pass: Spark jobs and driver time paid before
+  // a probe is scored, and as much as scoring itself on a small index.
+  // [[read]] keeps, per index dir, the resolved relation of every arm
+  // it served, keyed by the arm's path and [[StoreFiles.fingerprint]].
+  // Published arms are immutable (one atomic rename), so they hit until
+  // they are retired; the base `encoded` table can grow in place
+  // (`Similarity.ivfPqAppendSave`), which changes its fingerprint and
+  // misses. An arm with an empty fingerprint (non-local or unreadable)
+  // is never cached. Relations belong to the session that opened them,
+  // so an entry serves only that session; another session's read of
+  // the same dir replaces it. Every read drops the arms no longer on
+  // disk, and the dirs that are gone or whose session has stopped.
+  private final case class ServedArms(session: SparkSession,
+      arms: Map[String, (String, DataFrame)])
+  private val servedArms =
+    new java.util.concurrent.ConcurrentHashMap[String, ServedArms]()
+
+  /** The arm paths [[read]] holds open for `indexDir`. */
+  private[graft] def cachedArms(indexDir: String): Set[String] =
+    Option(servedArms.get(StoreFiles.cacheKey(indexDir)))
+      .fold(Set.empty[String])(_.arms.keySet)
+
   /** The serving view: base `encoded` plus every published append
     * delta, minus tombstoned ids (batch-ordered — see [[deleteBatch]]),
     * under the saved codebooks. Delta and tombstone counts are bounded
     * by [[compact]]'s schedule; each union arm keeps its own `__list`
     * pruning, and the tombstone mask is a broadcast anti join (delete
     * batches are small by nature; a backlog large enough to strain a
-    * broadcast is overdue for compaction). */
+    * broadcast is overdue for compaction).
+    *
+    * Arm cache: every arm (base, append delta, tombstone set, tier-run
+    * side) is opened once per session and reused while its file
+    * fingerprint (name + length + mtime of every file under it) is
+    * unchanged, so a repeat read of an unchanged index launches no
+    * Spark job and a read after an append opens only the new delta.
+    * Each read keeps the arms still on disk, whether or not it served
+    * them (an `asOf` read does not evict newer arms): arms retired by a
+    * fold, [[compact]] or [[retire]] drop out, and memory stays
+    * O(live arms) per index dir. Dirs that no longer exist and
+    * sessions that have stopped are dropped on every read. The
+    * retired, tiered-floor and torn-append checks run on every call. */
   def read(spark: SparkSession, indexDir: String,
            idCol: String = "vec_id",
            asOf: Option[Long] = None): Similarity.IvfPqIndex = {
     StoreFiles.requireNotRetired(indexDir, "vector index")
-    val base = Similarity.ivfPqLoad(spark, indexDir)
+    val (coarse, cb, nLists) = Similarity.ivfPqCodebooks(spark, indexDir)
+    val key = StoreFiles.cacheKey(indexDir)
+    val known = Option(servedArms.get(key)).filter(_.session eq spark)
+      .fold(Map.empty[String, (String, DataFrame)])(_.arms)
+    val served = Map.newBuilder[String, (String, DataFrame)]
+    // fingerprint BEFORE opening: a change racing the open leaves a
+    // stale fingerprint that misses next time, never a stale relation
+    // under a current fingerprint
+    def open(path: String): DataFrame = {
+      val fp = StoreFiles.fingerprint(new java.io.File(path))
+      if (fp.isEmpty) spark.read.parquet(path)
+      else {
+        val df = known.get(path).filter(_._1 == fp).map(_._2)
+          .getOrElse(spark.read.parquet(path))
+        served += path -> (fp, df)
+        df
+      }
+    }
     // `asOf` serves the index AS OF a batch id (inclusive): append
     // deltas and tombstones published after it are invisible — the
     // snapshot an evaluation run pins so its candidate set cannot
@@ -338,20 +392,18 @@ object VectorIndexSink {
     // tags (and run tombstones their batch) physically
     val enc = (runs
       .filter(r => new java.io.File(r.run.get, "rows").isDirectory)
-      .map(r => spark.read
-        .parquet(s"${r.run.get.getAbsolutePath}/rows")) ++
+      .map(r => open(s"${r.run.get.getAbsolutePath}/rows")) ++
       upTo(deltaDirs(indexDir)).map { case (b, f) =>
-        spark.read.parquet(f.getAbsolutePath).withColumn("__b", lit(b))
+        open(f.getAbsolutePath).withColumn("__b", lit(b))
       })
-      .foldLeft(base.encoded.withColumn("__b", lit(-1L)))(
+      .foldLeft(open(s"$indexDir/encoded").withColumn("__b", lit(-1L)))(
         _ unionByName _)
     val dead = (runs
       .filter(r => new java.io.File(r.run.get, "tombs").isDirectory)
-      .map(r => spark.read
-        .parquet(s"${r.run.get.getAbsolutePath}/tombs")
+      .map(r => open(s"${r.run.get.getAbsolutePath}/tombs")
         .select(col(idCol), col("__t"))) ++
       upTo(tombstoneDirs(indexDir)).map { case (t, f) =>
-        spark.read.parquet(f.getAbsolutePath).withColumn("__t", lit(t))
+        open(f.getAbsolutePath).withColumn("__t", lit(t))
       }).reduceOption(_ unionByName _)
     val masked = dead match {
       case None => enc
@@ -364,7 +416,14 @@ object VectorIndexSink {
           enc(idCol) === d("__did") && d("__t") >= enc("__b"),
           "left_anti")
     }
-    base.copy(encoded = masked.drop("__b"))
+    servedArms.put(key, ServedArms(spark,
+      known.filter(a => new java.io.File(a._1).isDirectory) ++
+        served.result()))
+    servedArms.entrySet.removeIf { e =>
+      !new java.io.File(e.getKey).isDirectory ||
+        e.getValue.session.sparkContext.isStopped
+    }
+    Similarity.IvfPqIndex(masked.drop("__b"), coarse, cb, nLists)
   }
 
   /** Fold base + deltas minus tombstones into a fresh single-table
@@ -491,6 +550,7 @@ object VectorIndexSink {
       tombstoneDirs(indexDir).map(_._1) ++ tieredFloor(indexDir)
     StoreFiles.beginRetire(indexDir, compactedTo,
       if (latest.isEmpty) None else Some(latest.max))
+    servedArms.remove(StoreFiles.cacheKey(indexDir))
     StoreFiles.deletePayload(indexDir)
   }
 

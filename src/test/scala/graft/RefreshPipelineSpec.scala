@@ -224,9 +224,9 @@ class RefreshPipelineSpec extends SparkSpec {
     // first trigger: rebuild from the confirm frame (prior only)
     val bl0 = acc.bloomFor(0L, prior)
     assert(might(bl0, prior) && !might(bl0, b0))
-    acc.advance(0L, Some(b0))
+    acc.advanceWith(0L, b0.as[String].collect())
     // unbroken: the held bloom now covers prior + b0 with no rebuild
-    // (same instance — mergeInPlace mutated it)
+    // (same instance — putString mutated it)
     val bl1 = acc.bloomFor(1L, prior.unionByName(b0))
     assert((bl1 eq bl0) && might(bl1, b0))
     // a failed trigger never called advance: its RETRY still sees the
@@ -235,11 +235,11 @@ class RefreshPipelineSpec extends SparkSpec {
     assert((blRetry eq bl0) && !might(blRetry, b1))
     // sequence break (restart resumed at a later id): rebuilt from the
     // caller's confirm frame, which is the full reference again
-    acc.advance(1L, Some(b1))
+    acc.advanceWith(1L, b1.as[String].collect())
     val blBroken = acc.bloomFor(5L, prior.unionByName(b0).unionByName(b1))
     assert(might(blBroken, b1) && might(blBroken, prior))
     // empty-trigger advance keeps the sequence unbroken without a merge
-    acc.advance(5L, None)
+    acc.advanceWith(5L, Array.empty)
     assert(acc.bloomFor(6L, prior) eq blBroken)
     // bootstrapping a FRESH store: an empty reference rebuilds to an
     // empty bloom (nothing is a member) instead of the 0-row

@@ -47,6 +47,51 @@ class SourceSpec extends SparkSpec {
       java.sql.Timestamp.valueOf("2024-01-02 10:00:00"))
   }
 
+  test("JsonlStage: a declared column null in every row of a drop " +
+      "survives the stage and the drop merges") {
+    // Spark's JSON writer omits null fields, so a drop whose optional
+    // columns are empty in every row stages without them; the read
+    // restores them, exactly as the CSV path reads the same drop
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{StringType, StructField, StructType}
+    val spec = TableSpecs.fCalls
+    val sparse = Set("prev_contact_id", "next_contact_id", "customer_voice")
+    def drop(ids: Seq[String], updated: String, empty: Boolean) =
+      spark.createDataFrame(java.util.Arrays.asList(ids.map { id =>
+        Row.fromSeq(spec.declared.map {
+          case "contact_id" => id
+          case "last_update_time" => updated
+          case c if empty && sparse(c) => null
+          case c if spec.timestamps.contains(c) => "2024-01-01 10:00:00"
+          case c if spec.longs.contains(c) => "7"
+          case c => s"$c-$id"
+        })
+      }: _*), StructType(spec.declared.map(StructField(_, StringType))))
+    def withDate(df: org.apache.spark.sql.DataFrame) =
+      df.withColumn("init_date", to_date(col("init_time")))
+    val dir = tmpDir("sparse")
+    val target = s"$dir/f_calls"
+    Merge.scd1Partitioned(target,
+      withDate(spec(drop(Seq("c1", "c2"), "2024-01-01 11:00:00", false))),
+      Seq("contact_id"), "last_update_time", "init_date")
+    val late = drop(Seq("c2", "c3"), "2024-01-02 11:00:00", true)
+    JsonlStage.write(late, s"$dir/stage")
+    assert(sparse.forall(c => !spark.read.json(s"$dir/stage")
+      .columns.contains(c)))
+    val staged = JsonlStage.read(spark, s"$dir/stage", spec)
+    assert(staged.columns.toSeq == spec.declared)
+    assert(staged.schema == spec(late).schema)
+    assert(staged.collect().toSet == spec(late).collect().toSet)
+    Merge.scd1Partitioned(target, withDate(staged), Seq("contact_id"),
+      "last_update_time", "init_date")
+    val out = spark.read.parquet(target)
+      .select("contact_id", "prev_contact_id", "customer_voice")
+      .as[(String, String, String)].collect().sortBy(_._1).toSeq
+    // c2 takes the later, sparse version; the string battery fills ""
+    assert(out == Seq(("c1", "prev_contact_id-c1", "customer_voice-c1"),
+      ("c2", "", ""), ("c3", "", "")))
+  }
+
   test("PaginatedSource: drains pages by token, retries on throttle") {
     var throttled = false
     val pages = Map(

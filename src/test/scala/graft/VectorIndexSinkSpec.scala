@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import graft.operators.Similarity
-import graft.streaming.{StoreFiles, VectorIndexSink}
+import graft.streaming.{StoreFiles, StoreRoot, VectorIndexSink}
 
 /** Streaming vector ingest: batchId-keyed exactly-once deltas under
   * frozen codebooks compose to the in-memory append; re-delivery and
@@ -27,6 +27,30 @@ class VectorIndexSinkSpec extends SparkSpec {
         java.util.Comparator.reverseOrder[java.nio.file.Path]())
       .iterator().asScala
       .foreach(p => java.nio.file.Files.deleteIfExists(p))
+  }
+
+  private def range(lo: Long, hi: Long) =
+    corpus.filter(col("vec_id") >= lo && col("vec_id") < hi)
+
+  private def ids(i: Similarity.IvfPqIndex): Set[Long] =
+    i.encoded.select("vec_id").as[Long].collect().toSet
+
+  /** `body`'s result and the Spark jobs it launched. */
+  private def jobsOf[A](body: => A): (A, Int) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val a = body
+      org.apache.spark.sql.graftglue.GraftGlue
+        .drainListenerBus(spark.sparkContext)
+      (a, jobs.get())
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("exactly-once appendBatch: a re-delivered batchId is a no-op; " +
@@ -303,6 +327,133 @@ class VectorIndexSinkSpec extends SparkSpec {
         Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
           .map(x => Option(x.getMessage).getOrElse("")).toSeq
       assert(messages(e).exists(_.contains("unknown op")))
+    } finally rmTree(base)
+  }
+
+  test("read's arm cache: a repeat read launches no Spark job; new " +
+      "deltas, in-place base appends and tombstones are all served") {
+    val base = java.nio.file.Files.createTempDirectory("graft_varms_")
+    try {
+      val ix = base.toString
+      val all = corpus
+      Similarity.ivfPqSave(Similarity.ivfPqBuild(range(0L, 30L),
+        nLists = 3, m = 2, kCodes = 4, iterations = 2), ix)
+      VectorIndexSink.appendBatch(spark, ix, 0L, range(30L, 35L))
+      def idsAsOf(b: Long) =
+        ids(VectorIndexSink.read(spark, ix, asOf = Some(b)))
+      val (first, firstJobs) = jobsOf(VectorIndexSink.read(spark, ix))
+      assert(firstJobs > 0)
+      val (again, againJobs) = jobsOf(VectorIndexSink.read(spark, ix))
+      assert(againJobs == 0, s"repeat read ran $againJobs jobs")
+      assert(ids(again) == ids(first) && ids(first) == (0L until 35L).toSet)
+      VectorIndexSink.appendBatch(spark, ix, 1L, range(35L, 38L))
+      // an asOf read below the new delta serves the old view...
+      val asOf0 = idsAsOf(0L)
+      // ...and the next full read opens only the new delta: the same
+      // jobs as opening that one arm on its own
+      val (withB1, b1Jobs) = jobsOf(VectorIndexSink.read(spark, ix))
+      val (_, openJobs) = jobsOf(spark.read.parquet(s"$ix/appends/b1"))
+      assert(b1Jobs == openJobs, s"read after append ran $b1Jobs jobs")
+      assert(ids(withB1) == (0L until 38L).toSet)
+      // an asOf read keeps the newer arms it does not serve: the full
+      // read right after it opens nothing
+      idsAsOf(0L)
+      val (_, afterAsOfJobs) = jobsOf(VectorIndexSink.read(spark, ix))
+      assert(afterAsOfJobs == 0,
+        s"full read after an asOf read ran $afterAsOfJobs jobs")
+      // the base grows in place: its fingerprint changes and it reopens
+      Similarity.ivfPqAppendSave(spark, ix, range(38L, 40L))
+      assert(ids(VectorIndexSink.read(spark, ix)) == (0L until 40L).toSet)
+      // a tombstone masks base and delta ids alike
+      VectorIndexSink.deleteBatch(spark, ix, 2L,
+        all.filter(col("vec_id").isin(3L, 31L, 36L)).select("vec_id"))
+      assert(ids(VectorIndexSink.read(spark, ix)) ==
+        (0L until 40L).toSet -- Set(3L, 31L, 36L))
+      // asOf views are the same before and after cached reads (the base
+      // carries its in-place append at every asOf)
+      assert(asOf0 == (0L until 35L).toSet)
+      assert(idsAsOf(0L) == asOf0 ++ Set(38L, 39L))
+      assert(idsAsOf(1L) == (0L until 40L).toSet)
+      assert(ids(VectorIndexSink.read(spark, ix)) ==
+        (0L until 40L).toSet -- Set(3L, 31L, 36L))
+    } finally rmTree(base)
+  }
+
+  test("read's arm cache serves nothing stale after a tier fold or a " +
+      "compact + retire, and a retired dir still fails loudly") {
+    val base = java.nio.file.Files.createTempDirectory("graft_varmfold_")
+    try {
+      val root = s"$base/root"
+      val all = corpus
+      Similarity.ivfPqSave(Similarity.ivfPqBuild(range(0L, 24L),
+        nLists = 3, m = 2, kCodes = 4, iterations = 2), StoreRoot.init(root))
+      (0 until 4).foreach { b =>
+        StoreRoot.appendVectors(spark, root, b.toLong,
+          range(24L + 4 * b, 28L + 4 * b))
+      }
+      StoreRoot.deleteVectors(spark, root, 4L,
+        all.filter(col("vec_id").isin(1L, 25L)).select("vec_id"))
+      val want = (0L until 40L).toSet -- Set(1L, 25L)
+      assert(ids(StoreRoot.readVectors(spark, root)) == want)
+      // a tier fold folds the oldest arms into a run and retires them
+      val gen0 = StoreRoot.currentDir(root)
+      assert(StoreRoot.compactVectorsTiered(spark, root, fanout = 2))
+      assert(!new java.io.File(s"$gen0/appends/b0").exists())
+      assert(ids(StoreRoot.readVectors(spark, root)) == want)
+      // a tombstone past the fold masks a row the run now serves
+      StoreRoot.deleteVectors(spark, root, 5L,
+        all.filter(col("vec_id") === 26L).select("vec_id"))
+      assert(ids(StoreRoot.readVectors(spark, root)) == want - 26L)
+      // a generation fold: compact into gen1, swap, retire gen0
+      assert(StoreRoot.compactVectors(spark, root))
+      assert(StoreRoot.currentDir(root) != gen0)
+      assert(ids(StoreRoot.readVectors(spark, root)) == want - 26L)
+      val e = intercept[IllegalStateException] {
+        VectorIndexSink.read(spark, gen0)
+      }
+      assert(e.getMessage.contains("retired"))
+    } finally rmTree(base)
+  }
+
+  test("read's arm cache never shares a relation between sessions") {
+    val base = java.nio.file.Files.createTempDirectory("graft_varmsess_")
+    try {
+      val ix = base.toString
+      val all = corpus
+      Similarity.ivfPqSave(Similarity.ivfPqBuild(
+        all.filter(col("vec_id") < 30), nLists = 3, m = 2, kCodes = 4,
+        iterations = 2), ix)
+      VectorIndexSink.appendBatch(spark, ix, 0L,
+        all.filter(col("vec_id") >= 30))
+      val other = spark.newSession()
+      val mine = VectorIndexSink.read(spark, ix)
+      val (theirs, theirJobs) = jobsOf(VectorIndexSink.read(other, ix))
+      assert(theirJobs > 0, "the second session reused the first's arms")
+      assert(mine.encoded.sparkSession eq spark)
+      assert(theirs.encoded.sparkSession eq other)
+      assert(ids(VectorIndexSink.read(spark, ix)) == ids(theirs))
+      assert(VectorIndexSink.read(other, ix).encoded.sparkSession eq other)
+    } finally rmTree(base)
+  }
+
+  test("read's arm cache drops the arms of a dir that no longer exists") {
+    val base = java.nio.file.Files.createTempDirectory("graft_varmgone_")
+    try {
+      val Seq(gone, kept) = Seq("gone", "kept").map(n => s"$base/$n")
+      val built = Similarity.ivfPqBuild(range(0L, 30L),
+        nLists = 3, m = 2, kCodes = 4, iterations = 2)
+      Seq(gone, kept).foreach { ix =>
+        Similarity.ivfPqSave(built, ix)
+        VectorIndexSink.appendBatch(spark, ix, 0L, range(30L, 35L))
+      }
+      VectorIndexSink.read(spark, gone)
+      assert(VectorIndexSink.cachedArms(gone) ==
+        Set(s"$gone/encoded", s"$gone/appends/b0"))
+      rmTree(java.nio.file.Paths.get(gone))
+      // any later read, of any dir, lets go of the deleted dir's arms
+      assert(ids(VectorIndexSink.read(spark, kept)) == (0L until 35L).toSet)
+      assert(VectorIndexSink.cachedArms(gone).isEmpty)
+      assert(VectorIndexSink.cachedArms(kept).size == 2)
     } finally rmTree(base)
   }
 }
