@@ -1,7 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** Incremental-discovery ledger (SURVEY.md §2.1 S2 / §2.5 D2).
   *
@@ -10,20 +12,27 @@ import org.apache.spark.sql.functions._
   * ledger is an append-only parquet of processed keys; discovery is a
   * left-anti join. At scale the ledger is tiny relative to the data (one row
   * per ingested batch/folder), so the anti-join broadcasts.
+  *
+  * Discovery runs no footer or schema-inference job: existence is a file
+  * system test, and the ledger is read with its declared `key string`
+  * schema. A broadcast left-anti join needs no distinct keys, so a key
+  * marked twice costs one more broadcast row, not a shuffle. A ledger that
+  * cannot be read (a failed stat, a corrupt part file) fails discovery: it
+  * is never taken for an empty ledger, which would reload every drop.
   */
 final class Ledger(spark: SparkSession, path: String) {
 
-  private def exists: Boolean =
-    try { spark.read.parquet(path).schema.nonEmpty && true }
-    catch { case _: Throwable => false }
+  private val schema = StructType(Seq(StructField("key", StringType)))
 
+  private def exists: Boolean = {
+    val p = new Path(path)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+  }
+
+  /** Every key marked so far, duplicates included. */
   def processedKeys: DataFrame =
-    if (exists) spark.read.parquet(path).select("key").distinct()
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("key",
-          org.apache.spark.sql.types.StringType))))
+    if (exists) spark.read.schema(schema).parquet(path)
+    else spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
 
   /** Candidates not yet processed. `candidates` must have a `key` column. */
   def discoverNew(candidates: DataFrame): DataFrame =

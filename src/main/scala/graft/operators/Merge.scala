@@ -9,13 +9,17 @@ import org.apache.spark.sql.functions._
   * `Amazon Connect/Amazon Connect CTR with boto3/SP_boto3_connect_redshift.sql:5-26`,
   * `Google Sheets/Goals/lambda_legal_goals_upsert.py:48-59`).
   *
-  * Scale notes (100 TB): every merge here is ONE shuffle on the key columns
-  * (the anti-join and keep-latest reuse the same hash partitioning — AQE
-  * plans them as a single exchange per side). For a partitioned target,
-  * prefer merging partition-by-partition (e.g. facts partitioned by date)
-  * so only touched partitions are rewritten; the anti-join then runs with
-  * partition pruning on the target scan. For very hot keys, keepLatest uses
-  * max_by-style aggregation rather than a global sort.
+  * Scale notes (100 TB): every SCD1 merge here ([[scd1]] and the two
+  * warehouse forms built on it) is keep-latest on the staging side, then
+  * ONE full-outer join against the target on the key columns. The target
+  * is scanned once. Keep-latest's window exchange already hash-partitions
+  * the batch on the keys, so the join adds one exchange on the target side
+  * — none when the target is bucketed on the keys ([[scd1Bucketed]]): its
+  * scan stays bucket-aligned and the batch alone is shuffled, once, into
+  * the bucketing. For a partitioned target, merge partition-by-partition
+  * ([[scd1Partitioned]]) so only touched partitions are read and
+  * rewritten. Keep-latest is a row_number over the key partitioning, never
+  * a global sort.
   */
 object Merge {
 
@@ -62,16 +66,31 @@ object Merge {
   }
 
   /** M1 — SCD Type 1 merge: matched => overwrite all columns, not matched =>
-    * insert (`SP_litify_task.sql:14-71`). Returns the new target content.
-    * Staging is first reduced to one row per key (keep-latest), then the
-    * delta filter drops stale rows, then target rows with a delta key are
-    * replaced. Idempotent: merge(merge(t,s),s) == merge(t,s). */
+    * insert (`SP_litify_task.sql:14-71`). Returns the new target content,
+    * in the target's column order. Staging is first reduced to one row per
+    * key (keep-latest), then full-outer joined with the target on `keys`;
+    * per key the staging row wins iff it is present and the target row is
+    * absent, has a NULL `ordering`, or has a smaller one (strict `>`: an
+    * equal ordering keeps the target row) — the [[delta]] rule. NULL keys
+    * never match, so target rows with a NULL key all survive and the
+    * batch's latest NULL-key row is inserted. Assumes the target holds one
+    * row per key, as every merge here leaves it. Idempotent:
+    * merge(merge(t,s),s) == merge(t,s). */
   def scd1(target: DataFrame, staging: DataFrame, keys: Seq[String],
            ordering: String): DataFrame = {
-    val latest = keepLatest(staging, keys, ordering)
-    val d = delta(target, latest, keys, ordering)
-    target.join(d.select(keys.map(col): _*), keys, "left_anti")
-      .unionByName(d.select(target.columns.map(col): _*))
+    val values = target.columns.toSeq.filterNot(keys.contains)
+    def side(df: DataFrame, p: String): DataFrame =
+      df.select(keys.map(col) ++ values.map(c => col(c).as(p + c)) :+
+        lit(true).as(p + "_in"): _*)
+    val s = side(keepLatest(staging, keys, ordering), "__s_")
+    val t = side(target, "__t_")
+    val stagingWins = col("__s__in").isNotNull && (col("__t__in").isNull ||
+      col(s"__t_$ordering").isNull ||
+      col(s"__s_$ordering") > col(s"__t_$ordering"))
+    t.join(s, keys, "full_outer").select(target.columns.toSeq.map { c =>
+      if (keys.contains(c)) col(c)
+      else when(stagingWins, col(s"__s_$c")).otherwise(col(s"__t_$c")).as(c)
+    }: _*)
   }
 
   /** M2 — append-if-absent (immutable facts): insert keys not present, never
@@ -93,7 +112,8 @@ object Merge {
     * date merges a daily batch by rewriting a handful of partitions, not
     * the table. Requires `partitionCol` to be IMMUTABLE per key (e.g.
     * creation date) — if an update could move a key across partitions, the
-    * stale copy in the old partition would survive.
+    * stale copy in the old partition would survive. The pruned target is
+    * scanned once, by [[scd1]]'s full-outer join.
     *
     * The distinct-partition collect is driver-side by design: it is one
     * value per touched partition (bounded by the batch's date span), and
@@ -136,7 +156,7 @@ object Merge {
     * parquet table (`bucketBy(nBuckets, keys)`), i.e. pre-shuffled ON DISK
     * by the merge key. Every merge then shuffles only the incoming batch
     * into that bucketing — the 100 TB target is read bucket-aligned with
-    * NO exchange on its side of the anti-join, and downstream key-equi
+    * NO exchange on its side of the merge join, and downstream key-equi
     * joins between bucketed tables run exchange-free (see MergeSpec's
     * zero-Exchange assertion). Complements [[scd1Partitioned]] (time-pruned
     * rewrite) for targets whose updates scatter across the key space so no
@@ -176,8 +196,12 @@ object Merge {
       writeBucketed(keepLatest(staging, keys, ordering), table)
     } else {
       val target = spark.table(table)
-      val merged = scd1(target, staging.select(target.columns.map(col): _*),
-        keys, ordering)
+      // the batch is shuffled once, straight into the target's bucketing:
+      // keep-latest and the merge join both reuse that partitioning, so the
+      // target's scan stays bucket-aligned whatever the shuffle partitions
+      val batch = staging.select(target.columns.map(col): _*)
+        .repartition(nBuckets, keys.map(col): _*)
+      val merged = scd1(target, batch, keys, ordering)
       writeBucketed(merged, tmp)
       spark.sql(s"DROP TABLE $table")
       spark.sql(s"ALTER TABLE $tmp RENAME TO $table")

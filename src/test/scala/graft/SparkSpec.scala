@@ -18,4 +18,22 @@ trait SparkSpec extends AnyFunSuite {
     s.sparkContext.setLogLevel("ERROR")
     s
   }
+
+  /** `body`'s result and the Spark jobs it launched. */
+  protected def jobsOf[A](body: => A): (A, Int) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val a = body
+      org.apache.spark.sql.graftglue.GraftGlue
+        .drainListenerBus(spark.sparkContext)
+      (a, jobs.get())
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
 }

@@ -35,24 +35,6 @@ class VectorIndexSinkSpec extends SparkSpec {
   private def ids(i: Similarity.IvfPqIndex): Set[Long] =
     i.encoded.select("vec_id").as[Long].collect().toSet
 
-  /** `body`'s result and the Spark jobs it launched. */
-  private def jobsOf[A](body: => A): (A, Int) = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val a = body
-      org.apache.spark.sql.graftglue.GraftGlue
-        .drainListenerBus(spark.sparkContext)
-      (a, jobs.get())
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
-
   test("exactly-once appendBatch: a re-delivered batchId is a no-op; " +
       "stream drains across stop/resume compose to the in-memory append") {
     val base = java.nio.file.Files.createTempDirectory("graft_vsinkspec_")
