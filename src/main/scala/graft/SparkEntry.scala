@@ -1421,15 +1421,11 @@ object SparkEntry {
             .collect()(0).getLong(0)
           val cuts = (0 to 3).map(k => maxId * k / 3)
           val tDrops = System.nanoTime()
-          // the trigger-invariant prior derivations, cached exactly as
-          // RefreshPipeline.run caches them across triggers
-          val priorFps = Dedup.exactFingerprints(prior, "text")
-            .localCheckpoint(true)
-          val postings = Dedup.nearPostings(prior, "text",
-              numHashes = 32, bands = 8, mode = Dedup.Portable)
-            .localCheckpoint(true)
-          val refGrams = Dedup.ngramRefGrams(benchmark, "text", n = 5)
-            .localCheckpoint(true)
+          // the trigger-invariant prior caches, built by the same
+          // RefreshPipeline.priorCaches that run seeds a drain with
+          val caches = graft.streaming.RefreshPipeline.priorCaches(
+            prior, benchmark, textCol = "text", numHashes = 32,
+            bands = 8, decontamN = 5)
           try {
             (0 until 3).foreach { k =>
               graft.streaming.RefreshPipeline.processBatch(
@@ -1437,21 +1433,12 @@ object SparkEntry {
                     col("doc_id") > cuts(k) - (if (k == 0) 1 else 0)
                       && col("doc_id") <= cuts(k + 1))
                   .withColumn("embedding", emb),
-                k.toLong, prior, benchmark, priorFps, postings,
-                refGrams, s"$base/store", s"$base/ledger",
+                k.toLong, caches, s"$base/store", s"$base/ledger",
                 budget = 2048, shardCol = "source", idCol = "doc_id",
-                textCol = "text", numHashes = 32, bands = 8,
-                threshold = 0.8, decontamN = 5, minMatches = 2,
+                threshold = 0.8, minMatches = 2,
                 indexDir = Some(s"$base/ix"), vecCol = "embedding")
             }
-          } finally {
-            org.apache.spark.sql.graftglue.GraftGlue
-              .releaseCheckpoint(priorFps)
-            org.apache.spark.sql.graftglue.GraftGlue
-              .releaseCheckpoint(postings)
-            org.apache.spark.sql.graftglue.GraftGlue
-              .releaseCheckpoint(refGrams)
-          }
+          } finally caches.release()
           Bench.recordComponent("q171_three_drops",
             (System.nanoTime() - tDrops) / 1e9)
           val digest = graft.streaming.ShardSink
@@ -1842,13 +1829,9 @@ object SparkEntry {
             .collect()(0).getLong(0)
           val cuts = (0 to 3).map(k => maxId * k / 3)
           val tDrops = System.nanoTime()
-          val priorFps = Dedup.exactFingerprints(prior, "text")
-            .localCheckpoint(true)
-          val postings = Dedup.nearPostings(prior, "text",
-              numHashes = 32, bands = 8, mode = Dedup.Portable)
-            .localCheckpoint(true)
-          val refGrams = Dedup.ngramRefGrams(benchmark, "text", n = 5)
-            .localCheckpoint(true)
+          val caches = graft.streaming.RefreshPipeline.priorCaches(
+            prior, benchmark, textCol = "text", numHashes = 32,
+            bands = 8, decontamN = 5)
           try {
             (0 until 3).foreach { k =>
               graft.streaming.RefreshPipeline.processBatch(
@@ -1856,22 +1839,13 @@ object SparkEntry {
                     col("doc_id") > cuts(k) - (if (k == 0) 1 else 0)
                       && col("doc_id") <= cuts(k + 1))
                   .withColumn("embedding", emb),
-                k.toLong, prior, benchmark, priorFps, postings,
-                refGrams, storeDir = "", s"$base/ledger",
+                k.toLong, caches, storeDir = "", s"$base/ledger",
                 budget = 2048, shardCol = "source", idCol = "doc_id",
-                textCol = "text", numHashes = 32, bands = 8,
-                threshold = 0.8, decontamN = 5, minMatches = 2,
-                indexDir = None, vecCol = "embedding",
-                shardRoot = Some(sRoot), indexRoot = Some(iRoot))
+                threshold = 0.8, minMatches = 2, indexDir = None,
+                vecCol = "embedding", shardRoot = Some(sRoot),
+                indexRoot = Some(iRoot))
             }
-          } finally {
-            org.apache.spark.sql.graftglue.GraftGlue
-              .releaseCheckpoint(priorFps)
-            org.apache.spark.sql.graftglue.GraftGlue
-              .releaseCheckpoint(postings)
-            org.apache.spark.sql.graftglue.GraftGlue
-              .releaseCheckpoint(refGrams)
-          }
+          } finally caches.release()
           Bench.recordComponent("q176_three_drops",
             (System.nanoTime() - tDrops) / 1e9)
           def storeDigest(asOf: Option[Long]) =

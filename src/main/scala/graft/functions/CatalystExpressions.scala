@@ -1281,11 +1281,20 @@ object BpeByteCodec {
     * the sequential replace chain a later duplicate rank can never fire
     * (its pair is consumed by the earlier one and pair components only
     * ever grow), so mapping every occurrence to the FIRST rank is the
-    * chain's fixed point. */
+    * chain's fixed point. A pair packs into one Int key as
+    * `(a << 16) | b`, which is collision-free only while every symbol
+    * id fits 16 bits and `(0xFFFF, 0xFFFF)` (== the -1 empty-slot
+    * sentinel) cannot occur — so the largest symbol id, 255 + merges,
+    * must be at most 0xFFFE; a larger table fails here instead of
+    * mis-tokenizing silently. */
   final class Vocab(val pairA: Array[Int],
                     val pairB: Array[Int]) extends Serializable {
     require(pairA.length == pairB.length)
     val nMerges: Int = pairA.length
+    require(255L + nMerges <= 0xFFFE,
+      s"byte-BPE vocab of $nMerges merges has symbol ids up to " +
+        s"${255L + nMerges}, past the 16-bit pair-key limit 0xFFFE " +
+        s"(at most ${0xFFFE - 255} merges)")
     // capacity: power of two >= 2x entries (load factor <= 0.5)
     private val cap: Int = {
       var c = 16

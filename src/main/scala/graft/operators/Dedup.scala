@@ -916,12 +916,12 @@ object Dedup {
     *
     * `bloom` hands in a pre-built filter covering (a superset of) the
     * reference fingerprints, skipping the per-call bloom jobs entirely
-    * — the refresh loop's slope floor: [[graft.streaming
-    * .RefreshPipeline]] maintains ONE merged bloom across triggers
-    * (prior + every earlier accepted batch) so a trigger's exact tier
-    * pays O(batch) bloom work instead of re-aggregating the whole
-    * accepted history. Exactness is unaffected either way: the bloom
-    * only routes candidates into the confirming anti join. */
+    * — for a loop that holds ONE merged bloom across calls (prior +
+    * every earlier accepted batch, as [[graft.streaming
+    * .RefreshPipeline.FingerprintBloom]] does), so each call pays
+    * O(batch) bloom work instead of re-aggregating the whole accepted
+    * history. Exactness is unaffected either way: the bloom only
+    * routes candidates into the confirming anti join. */
   def exactIncremental(batch: DataFrame, prior: DataFrame,
                        textCol: String, idCol: String,
                        fpp: Double = 0.01,
@@ -945,13 +945,13 @@ object Dedup {
   /** [[exactIncremental]] with the reference split into its STABLE part
     * (the prior corpus' fingerprints, cached once per run) and its
     * GROWING part (the accepted-history ledger) and the bloom supplied
-    * by the caller — the refresh loop's steady-state exact tier.
+    * by the caller.
     *
     * Why the split matters: the single-frame form unions both parts,
     * and a union has no partitioning, so every trigger's confirm join
     * re-shuffles and re-sorts the CORPUS-sized reference. Here the
     * caller caches `stableFps` pre-partitioned and pre-sorted on
-    * `__pfp` (see [[graft.streaming.RefreshPipeline.run]]), so the
+    * `__pfp` (`GraftGlue.checkpointWithLayout`), so the
     * stable confirm is a partition-local merge scan with ZERO exchange
     * and zero sort on the reference side, every trigger; only the
     * (compact, fingerprint-only) ledger side still pays a per-trigger

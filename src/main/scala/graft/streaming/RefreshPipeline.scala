@@ -39,18 +39,17 @@ import graft.functions.{Bpe, BpeByteVocab}
   * trigger-invariant, so each is computed ONCE per run and cached
   * (localCheckpoint, released on exit); a trigger pays only its own
   * batch's row-local passes, the bounded joins against those caches,
-  * and the O(batch) appends. The exact tier's two history-sized
-  * per-trigger terms are floored on top of that: the bloom over
+  * and the O(batch) appends. The exact tier has ONE path, and neither
+  * of its history-sized terms grows per trigger: the bloom over
   * prior ∪ accepted history is a driver-held accumulator
-  * ([[FingerprintBloom]] — built once, O(batch) `mergeInPlace` per
-  * trigger), and the confirm join is split
-  * ([[graft.operators.Dedup.exactIncrementalStaged]]) so the
-  * corpus-sized stable side joins exchange-free against its
-  * pre-partitioned cache. What remains O(accepted history) per
-  * trigger: reading the (compact, fingerprint-only) ledger union for
-  * the growing confirm side — pennies next to the aggregation and
-  * corpus shuffle this discipline removes, and bounded further by
-  * only the bloom-positive candidate sliver reaching it.
+  * ([[FingerprintBloom]] — built once, O(batch) `putString` per
+  * trigger) probed on the batch checkpoint's own job, and only the
+  * bloom-positive candidates are confirmed — against the prior through
+  * [[graft.operators.FingerprintIndex.hits]] (O(candidates x log
+  * corpus), no join) and against the earlier ledger batches through a
+  * prefix-pruned read of the (compact, fingerprint-only) batches whose
+  * prefix bitmaps meet the candidates'. The confirmed hits drop rows
+  * in one row-local filter; no exchange touches the corpus.
   *
   * Ledger delivery contract (the at-least-once crash window, closed):
   * the ledger is a set of per-trigger directories `ledgerDir/b<id>`,
@@ -73,12 +72,10 @@ object RefreshPipeline {
     * trigger re-aggregates a bloom over prior ∪ all earlier ledger
     * batches: O(accepted history) per trigger, the one per-trigger
     * term that grows with the corpus. With it the prior's bloom is
-    * built once and each trigger's accepted fingerprints are
-    * `mergeInPlace`d in O(batch) (blooms built with identical
-    * (capacity, fpp) are bit-compatible), so steady-state exact-tier
-    * cost is the batch's own aggregation plus a constant-size driver
-    * merge (~1.2 bytes/key at fpp 0.01 — size the fpp, not the
-    * corpus).
+    * built once and each trigger's accepted fingerprints are folded
+    * in with `putString` in O(batch), so steady-state exact-tier cost
+    * is the batch's own probe plus a driver-side fold (~1.2 bytes/key
+    * at fpp 0.01 — size the fpp, not the corpus).
     *
     * Crash/restart discipline: the accumulator is run-scoped driver
     * state, deliberately NOT persisted. [[bloomFor]] hands out the
@@ -89,7 +86,7 @@ object RefreshPipeline {
     * self-masking window stays closed exactly as for the confirm join.
     * Correctness never rests on the bloom's content: it must merely
     * cover the confirm reference (a superset is fine — extra members
-    * only route more candidates into the confirming anti join), and
+    * only route more candidates into the confirm lookups), and
     * both the held and rebuilt paths cover it by construction.
     * Saturation past `capacity` degrades fpp (more confirm work),
     * never exactness. */
@@ -312,8 +309,26 @@ object RefreshPipeline {
     }
   }
 
-  /** The trigger-invariant prior-side caches both drain entry points
-    * ([[run]], [[runManaged]]) seed once per run: exact-tier
+  /** The trigger-invariant prior-side caches every trigger of one drain
+    * shares (see [[priorCaches]]), together with the text column and
+    * band/gram parameters they were built under — [[processBatch]]
+    * reads those from here, so a trigger cannot probe postings or
+    * grams built under other parameters. [[release]] frees the
+    * checkpoints and the index; the bloom is plain driver state. */
+  private[graft] final case class PriorCaches(
+      priorFps: DataFrame, postings: DataFrame, refGrams: DataFrame,
+      bloom: FingerprintBloom, index: graft.operators.FingerprintIndex,
+      textCol: String, numHashes: Int, bands: Int, decontamN: Int) {
+    def release(): Unit = {
+      import org.apache.spark.sql.graftglue.GraftGlue
+      GraftGlue.releaseCheckpoint(priorFps)
+      GraftGlue.releaseCheckpoint(postings)
+      GraftGlue.releaseCheckpoint(refGrams)
+      index.release()
+    }
+  }
+
+  /** Build the [[PriorCaches]] a drain seeds once per run: exact-tier
     * fingerprints (a plain checkpoint for the bloom-rebuild reference,
     * plus a [[graft.operators.FingerprintIndex]] — range-partitioned
     * sorted long-pair arrays with O(partitions) driver bounds — for the
@@ -322,12 +337,11 @@ object RefreshPipeline {
     * off the fingerprint count. The three branches are mutually
     * independent one-off jobs, so they run OVERLAPPED (guide §2.6) and
     * the prologue pays the longest instead of the sum; the caller
-    * releases the checkpoints AND the index on exit. */
-  private def priorCaches(prior: DataFrame, benchmark: DataFrame,
-                          textCol: String, numHashes: Int, bands: Int,
-                          decontamN: Int)
-      : (DataFrame, DataFrame, DataFrame, FingerprintBloom,
-         graft.operators.FingerprintIndex) = {
+    * calls [[PriorCaches.release]] on exit. */
+  private[graft] def priorCaches(prior: DataFrame, benchmark: DataFrame,
+                                 textCol: String, numHashes: Int,
+                                 bands: Int, decontamN: Int)
+      : PriorCaches = {
     val shufflePartitions = prior.sparkSession.conf
       .get("spark.sql.shuffle.partitions").toInt
     val ec = scala.concurrent.ExecutionContext.global
@@ -354,9 +368,27 @@ object RefreshPipeline {
     val refGrams = scala.concurrent.Await.result(refGramsF,
       scala.concurrent.duration.Duration.Inf)
     // index bounds already carry the count — no extra count job
-    val bloomAcc = new FingerprintBloom(fpp = 0.01,
+    // capacity: the prior corpus plus generous accepted-history
+    // headroom (overflow degrades fpp, never exactness)
+    val bloom = new FingerprintBloom(fpp = 0.01,
       capacity = 2L * math.max(fpIndex.count, 1L) + 100000L)
-    (priorFps, postings, refGrams, bloomAcc, fpIndex)
+    PriorCaches(priorFps, postings, refGrams, bloom, fpIndex,
+      textCol, numHashes, bands, decontamN)
+  }
+
+  /** Swap the streaming state-store provider to `providerClass` (when
+    * given) and return the restore of the previous value. The session
+    * conf is read at query START, so set-before / restore-after scopes
+    * the provider to one drain. */
+  private def swapStateStoreProvider(sp: SparkSession,
+      providerClass: Option[String]): () => Unit = {
+    val providerKey = "spark.sql.streaming.stateStore.providerClass"
+    val providerPrev = sp.conf.getOption(providerKey)
+    providerClass.foreach(sp.conf.set(providerKey, _))
+    () => if (providerClass.isDefined) providerPrev match {
+      case Some(p) => sp.conf.set(providerKey, p)
+      case None => sp.conf.unset(providerKey)
+    }
   }
 
   /** One daemon carrier for the per-trigger index append so it overlaps
@@ -373,6 +405,26 @@ object RefreshPipeline {
         t.setDaemon(true)
         t
       })
+
+  /** Run `body` on [[appendPool]] with the calling thread's Spark-local
+    * properties (job group, cancel-on-interrupt, description, pool)
+    * mirrored onto the carrier, so its jobs cancel with the SAME group
+    * a serial execution would have used — the pool thread otherwise
+    * keeps whatever it inherited at creation. */
+  private def onAppendCarrier[A](sp: SparkSession)(body: => A)
+      : java.util.concurrent.Future[A] = {
+    val mirrored = Seq("spark.jobGroup.id",
+        "spark.job.interruptOnCancel", "spark.job.description",
+        "spark.scheduler.pool")
+      .map(k => k -> sp.sparkContext.getLocalProperty(k))
+    appendPool.submit(new java.util.concurrent.Callable[A] {
+      override def call(): A = {
+        mirrored.foreach { case (k, v) =>
+          sp.sparkContext.setLocalProperty(k, v) }
+        body
+      }
+    })
+  }
 
   /** Fingerprint-count threshold above which the single-task ledger
     * batch write warns (see the publish site in [[processBatch]]): 10M
@@ -441,28 +493,31 @@ object RefreshPipeline {
     * directly testable: compute the accepted docs against prior ∪
     * ledger-batches-below-`batchId`, commit the shard append (version
     * `batchId + 1`), optionally the index append (batch `batchId`),
-    * then publish this trigger's ledger batch. Idempotent under
-    * re-delivery by construction. */
+    * then publish this trigger's ledger batch and fold its accepted
+    * fingerprints into `caches.bloom`. Every tier reads `caches`: the
+    * exact tier probes the held bloom on the batch checkpoint's own job
+    * and confirms only its candidates, against `caches.index` and the
+    * prefix-pruned earlier ledger batches; the near and decontamination
+    * tiers probe `caches.postings` and `caches.refGrams`. Idempotent
+    * under re-delivery by construction. */
   private[graft] def processBatch(
-      batch: DataFrame, batchId: Long, prior: DataFrame,
-      benchmark: DataFrame, priorFps: DataFrame, postings: DataFrame,
-      refGrams: DataFrame, storeDir: String, ledgerDir: String,
-      budget: Int, shardCol: String, idCol: String, textCol: String,
-      numHashes: Int, bands: Int, threshold: Double, decontamN: Int,
-      minMatches: Int, indexDir: Option[String], vecCol: String,
+      batch: DataFrame, batchId: Long, caches: PriorCaches,
+      storeDir: String, ledgerDir: String, budget: Int, shardCol: String,
+      idCol: String, threshold: Double, minMatches: Int,
+      indexDir: Option[String], vecCol: String,
       shardRoot: Option[String] = None,
       indexRoot: Option[String] = None,
-      bloomAcc: Option[FingerprintBloom] = None,
       packSkew: Option[Boolean] = None,
       routeLog: Option[RouteLog] = None,
-      ledgerLog: Option[LedgerLog] = None,
-      fpIndex: Option[graft.operators.FingerprintIndex] = None): Unit = {
+      ledgerLog: Option[LedgerLog] = None): Unit = {
+    import org.apache.spark.sql.graftglue.GraftGlue
     val sp = batch.sparkSession
+    val textCol = caches.textCol
     // materialize the trigger's batch ONCE: the tiers below reference
-    // it through several plan branches (the bloom anti join alone
-    // evaluates its input twice), and each un-materialized branch
-    // re-executes the WHOLE upstream batch plan — ruinous when the
-    // upstream is itself stateful (q173 routes a stream-stream join
+    // it through several plan branches (the exact, near and
+    // decontamination tiers each read it), and each un-materialized
+    // branch re-executes the WHOLE upstream batch plan — ruinous when
+    // the upstream is itself stateful (q173 routes a stream-stream join
     // into this chain: every re-run replays the join's state stores;
     // measured 71 s -> join-plus-chain cost once materialized)
     val tB0 = System.nanoTime()
@@ -472,57 +527,42 @@ object RefreshPipeline {
     // (tiny) ledger batches of STRICTLY EARLIER triggers — never this
     // trigger's own (see the delivery contract above). Listed BEFORE
     // the batch checkpoint (driver-side file listing, no jobs) so the
-    // index path below can resolve its bloom first and ride the
-    // candidate pass on the checkpoint job itself.
+    // bloom resolves first and the candidate pass rides the checkpoint
+    // job itself.
     val earlier = StoreFiles
       .publishedDirs(ledgerDir, "b", StoreFiles.hasLedgerParquet)
       .filter(_._1 < batchId).map(_._2)
-    // the ledger union, as a multi-path read of leaf paths so mixed
-    // (legacy unpartitioned + prefix-partitioned) batch layouts share
-    // one uniform __pfp-only schema; prefixes prune at the PATH level
-    def ledgerFps(prefixes: Option[Set[Int]]): Option[DataFrame] = {
-      val paths = ledgerLeafPaths(earlier, prefixes)
-      if (paths.isEmpty) None
-      else Some(sp.read.parquet(paths: _*).select(col("__pfp")))
-    }
     val fpCol = graft.functions.TextFunctions.fingerprint(col(textCol))
-    // index path: resolve the bloom now (bloomFor touches only the
-    // prior caches and the ledger — never the batch; a first-trigger
-    // rebuild runs here instead of after the checkpoint, same total
-    // work) and OBSERVE the row count plus the bloom-positive
-    // candidate (fingerprint, ledger-prefix) pairs on the checkpoint's
-    // own materialization job — the candidate pass, the empty-trigger
-    // probe, and the old prefix-set job all collapse into metrics on a
-    // job the trigger already pays for.
-    val candObs: Option[(org.apache.spark.sql.Observation,
-        org.apache.spark.util.sketch.BloomFilter)] =
-      (bloomAcc, fpIndex) match {
-        case (Some(acc), Some(_)) =>
-          val refFps = ledgerFps(None) // the bloom REBUILD reference —
-            .map(priorFps.unionByName(_)) // scanned on a seq break only
-            .getOrElse(priorFps)
-          Some((org.apache.spark.sql.Observation(s"cands-b$batchId"),
-            acc.bloomFor(batchId, refFps)))
-        case _ => None
-      }
-    val toCheckpoint = candObs match {
-      case Some((ob, bloom)) =>
-        import org.apache.spark.sql.graftglue.GraftGlue
-        val probe = GraftGlue.column(
-          graft.functions.BloomMightContainExpr(
-            GraftGlue.expression(fpCol), bloom))
-        batch.observe(ob,
-          count(lit(1)).as("__n"),
-          // collect_list drops the nulls the when() leaves for
-          // non-candidates; bounded by the micro-batch contract
-          // (fpp x batch + true dups)
-          collect_list(when(fpCol.isNotNull && probe,
-            struct(fpCol.as("__fp"), pmod(xxhash64(fpCol),
-              lit(LedgerPrefixSpace.toLong)).cast("int").as("__pp"))))
-            .as("__cands"))
-      case None => batch
+    // resolve the bloom now (bloomFor touches only the prior caches and
+    // the ledger — never the batch; a first-trigger rebuild runs here
+    // instead of after the checkpoint, same total work) and OBSERVE the
+    // row count plus the bloom-positive candidate (fingerprint,
+    // ledger-prefix) pairs on the checkpoint's own materialization job
+    // — the candidate pass, the empty-trigger probe, and the prefix-set
+    // job all collapse into metrics on a job the trigger already pays
+    // for. The rebuild reference is prior ∪ every earlier ledger batch
+    // (a multi-path read of leaf paths, so mixed legacy and
+    // prefix-partitioned batch layouts share one __pfp-only schema),
+    // scanned on a sequence break only.
+    val rebuildRef = ledgerLeafPaths(earlier, None) match {
+      case Seq() => caches.priorFps
+      case paths => caches.priorFps.unionByName(
+        sp.read.parquet(paths: _*).select(col("__pfp")))
     }
-    val b0 = toCheckpoint.localCheckpoint(true)
+    val candObs = org.apache.spark.sql.Observation(s"cands-b$batchId")
+    val probe = GraftGlue.column(graft.functions.BloomMightContainExpr(
+      GraftGlue.expression(fpCol),
+      caches.bloom.bloomFor(batchId, rebuildRef)))
+    val b0 = batch.observe(candObs,
+        count(lit(1)).as("__n"),
+        // collect_list drops the nulls the when() leaves for
+        // non-candidates; bounded by the micro-batch contract
+        // (fpp x batch + true dups)
+        collect_list(when(fpCol.isNotNull && probe,
+          struct(fpCol.as("__fp"), pmod(xxhash64(fpCol),
+            lit(LedgerPrefixSpace.toLong)).cast("int").as("__pp"))))
+          .as("__cands"))
+      .localCheckpoint(true)
     if (debug0)
       println(f"[rp] b$batchId checkpoint ${(System.nanoTime() - tB0) / 1e9}%.2fs rows=${b0.count()}")
     val tRest = System.nanoTime()
@@ -538,13 +578,9 @@ object RefreshPipeline {
     // (The bloom sequence still advances: an empty trigger adds no
     // fingerprints, and skipping the advance would force the next
     // trigger into a needless rebuild. The observed count makes the
-    // probe free on the index path.)
-    val isEmptyTrigger = candObs match {
-      case Some((ob, _)) => ob.get("__n").asInstanceOf[Long] == 0L
-      case None => b0.isEmpty
-    }
-    if (isEmptyTrigger) {
-      bloomAcc.foreach(_.advanceWith(batchId, Array.empty)); return
+    // probe free.)
+    if (candObs.get("__n").asInstanceOf[Long] == 0L) {
+      caches.bloom.advanceWith(batchId, Array.empty); return
     }
     val debug = sys.env.contains("GRAFT_RP_DEBUG")
     def staged[A](label: String)(body: => A): A =
@@ -556,174 +592,77 @@ object RefreshPipeline {
         println(f"[rp] b$batchId $label ${(System.nanoTime() - t0) / 1e9}%.2fs")
         a
       }
-    val exactKept = bloomAcc match {
-      // the steady-state path: held merged bloom + INDEX-probed confirm.
-      // The previous shape anti-joined the batch's bloom-positive sliver
-      // against the corpus-sized fingerprint cache — zero-exchange by
-      // layout, but a sort-merge anti advances the reference iterator
-      // linearly, so every trigger SCANNED essentially the whole cache:
-      // O(corpus) per trigger. Now the sliver is collected (bounded by
-      // the micro-batch contract — fpp x batch + true dups), routed to
-      // the index's range partitions via O(partitions) driver bounds,
-      // and only partitions HOLDING a candidate are launched, each a
-      // binary search: O(candidates x log corpus) per trigger, flat in
-      // the corpus. Membership is exact (full 128-bit fingerprints), so
-      // the kept set is identical; the ledger confirm reads the same
-      // prefix-pruned paths as before, with the candidate prefixes now
-      // computed inside the SAME collect instead of their own job.
-      case Some(acc) if fpIndex.isDefined =>
-        val ix = fpIndex.get
-        import org.apache.spark.sql.graftglue.GraftGlue
-        val candRows = candObs.get._1.get("__cands")
-          .asInstanceOf[Seq[_]].map(_.asInstanceOf[
-            org.apache.spark.sql.Row])
-        val cands = candRows.map(_.getString(0)).toArray
-        val prefixes = candRows.map(_.getInt(1)).toSet
-        // a confirm-side match has an EQUAL fingerprint, hence an equal
-        // prefix — pruned ledger batches are provably match-free
-        val confirmPaths: Seq[String] =
-          if (cands.isEmpty || earlier.isEmpty) Seq.empty
-          else ledgerLeafPaths(earlier, Some(prefixes))
-        ledgerLog.foreach { ll =>
-          def bytesOf(f: java.io.File): Long =
-            if (f.isDirectory)
-              Option(f.listFiles()).getOrElse(Array.empty)
-                .map(bytesOf).sum
-            else f.length()
-          ll.record(LedgerRow(batchId, earlier.size,
-            confirmPaths.size,
-            confirmPaths.map(p => bytesOf(new java.io.File(p))).sum,
-            acc.rebuilds))
-        }
-        // the two confirm lookups are independent given the candidate
-        // set (stable index vs ledger paths) — overlap them on the
-        // append carrier (guide §2.6; free before the appends start),
-        // with the trigger's Spark-local properties mirrored so
-        // cancellation groups match serial execution
-        val ledgerHitsF: java.util.concurrent.Future[Array[String]] =
-          if (confirmPaths.isEmpty)
-            java.util.concurrent.CompletableFuture.completedFuture(
-              Array.empty[String])
-          else {
-            val mirrored = Seq("spark.jobGroup.id",
-                "spark.job.interruptOnCancel", "spark.job.description",
-                "spark.scheduler.pool")
-              .map(k => k -> sp.sparkContext.getLocalProperty(k))
-            appendPool.submit(
-              new java.util.concurrent.Callable[Array[String]] {
-                override def call(): Array[String] = {
-                  mirrored.foreach { case (k, v) =>
-                    sp.sparkContext.setLocalProperty(k, v) }
-                  val keys = graft.functions.Utf8SortedKeys.sorted(cands)
-                  val pfp = sp.read.parquet(confirmPaths: _*)
-                    .select(col("__pfp"))
-                  pfp.filter(GraftGlue.column(
-                      graft.functions.Utf8InSortedArrayExpr(
-                        GraftGlue.expression(pfp("__pfp")), keys)))
-                    .collect().map(_.getString(0))
-                }
-              })
-          }
-        val stableHits: Array[String] =
-          if (cands.isEmpty) Array.empty
-          else staged("exactconfirm") { ix.hits(cands) }
-        val ledgerHits: Array[String] = staged("exactledger") {
-          try ledgerHitsF.get()
-          catch {
-            case e: java.util.concurrent.ExecutionException =>
-              throw e.getCause
-          }
-        }
-        val allHits = stableHits ++ ledgerHits
-        if (allHits.isEmpty) Dedup.exact(b0, textCol, idCol)
-        else {
-          // drop = fingerprint CONFIRMED present in stable ∪ earlier
-          // ledger; null fingerprints always pass (null-text rows are
-          // per-id unique, exactIncremental's rule). One row-local
-          // binary-search filter — no join, no exchange.
-          val hitKeys = graft.functions.Utf8SortedKeys.sorted(allHits)
-          val kept = b0.filter(fpCol.isNull || !GraftGlue.column(
-            graft.functions.Utf8InSortedArrayExpr(
-              GraftGlue.expression(fpCol), hitKeys)))
-          Dedup.exact(kept, textCol, idCol)
-        }
-      // bloom accumulator WITHOUT a prior index (direct callers/tests):
-      // the split-confirm merge-join shape, unchanged
-      case Some(acc) =>
-        val refFps = ledgerFps(None) // the bloom REBUILD reference —
-          .map(priorFps.unionByName(_)) // only scanned on a seq break
-          .getOrElse(priorFps)
-        val bloom = acc.bloomFor(batchId, refFps)
-        // the candidate-prefix pass (one O(batch) row-local job) is
-        // only worth running when some batch is PRUNABLE: markers are
-        // ~free to read, so check them first — a history of dense
-        // bitmaps (large accepted batches occupy every prefix) cannot
-        // be pruned by any candidate set, and the job would be pure
-        // per-trigger overhead (the partitioned-ledger lesson,
-        // REFRESH_SLOPE.json). Deliberately conservative: a SMALL
-        // candidate set could in principle still prune a dense batch
-        // (pruning tests intersection, not density), but candidate
-        // size isn't known until the pass this gate decides whether to
-        // run — forgone pruning costs a read of data the confirm join
-        // filters anyway, never correctness
-        val anyPrunable = earlier.exists { d =>
-          val marker = StoreFiles
-            .readMarker(new java.io.File(d, PrefixMarker))
-            .flatMap(_.get("bits"))
-            .map(h => java.lang.Long.parseUnsignedLong(h, 16))
-          marker.exists(b =>
-            java.lang.Long.bitCount(b) <= LedgerPrefixSpace / 2) ||
-            Option(d.listFiles()).getOrElse(Array.empty)
-              .exists(f => f.isDirectory && f.getName.startsWith("__pp="))
-        }
-        val confirmPaths: Seq[String] =
-          if (earlier.isEmpty) Seq.empty
-          else if (!anyPrunable) ledgerLeafPaths(earlier, None)
-          else {
-            // the candidate prefix set: a confirm-side match has an
-            // EQUAL fingerprint, hence an equal prefix, so pruned
-            // batches are provably match-free; bloom-negative rows
-            // bypass the confirm join entirely and need no coverage
-            import org.apache.spark.sql.graftglue.GraftGlue
-            val fps = b0.select(graft.functions.TextFunctions
-              .fingerprint(col(textCol)).as("__fp"))
-            val probe = GraftGlue.column(
-              graft.functions.BloomMightContainExpr(
-                GraftGlue.expression(fps("__fp")), bloom))
-            val prefixes = fps
-              .filter(col("__fp").isNotNull && probe)
-              .select(pmod(xxhash64(col("__fp")),
-                lit(LedgerPrefixSpace.toLong)).cast("int").as("__pp"))
-              .distinct().collect().map(_.getInt(0)).toSet
-            ledgerLeafPaths(earlier, Some(prefixes))
-          }
-        val confirmLedger =
-          if (confirmPaths.isEmpty) None
-          else Some(sp.read.parquet(confirmPaths: _*)
-            .select(col("__pfp")))
-        // ledger-cost telemetry: the confirm read's actual inputs
-        // (paths + bytes — the O(accepted history) raw term) and the
-        // bloom's cumulative rebuild count, so a long-horizon artifact
-        // gates the amortization claims on observations
-        ledgerLog.foreach { ll =>
-          def bytesOf(f: java.io.File): Long =
-            if (f.isDirectory)
-              Option(f.listFiles()).getOrElse(Array.empty)
-                .map(bytesOf).sum
-            else f.length()
-          ll.record(LedgerRow(batchId, earlier.size,
-            confirmPaths.size,
-            confirmPaths.map(p => bytesOf(new java.io.File(p))).sum,
-            acc.rebuilds))
-        }
-        Dedup.exactIncrementalStaged(b0, textCol, idCol, priorFps,
-          confirmLedger, bloom)
-      case None =>
-        val refFps = ledgerFps(None).map(priorFps.unionByName(_))
-          .getOrElse(priorFps)
-        Dedup.exactIncremental(b0, prior, textCol, idCol,
-          refFps = Some(refFps))
+    // the exact tier's confirm: the bloom-positive sliver is collected
+    // (bounded by the micro-batch contract — fpp x batch + true dups),
+    // routed to the index's range partitions via O(partitions) driver
+    // bounds, and only partitions HOLDING a candidate are launched,
+    // each a binary search: O(candidates x log corpus) per trigger,
+    // flat in the corpus (an anti join against the corpus-sized
+    // fingerprint cache would scan essentially all of it per trigger).
+    // Membership is exact (full 128-bit fingerprints); the ledger
+    // confirm reads only the batches whose prefix bitmaps meet the
+    // candidates' prefixes, computed inside the SAME collect.
+    val candRows = candObs.get("__cands")
+      .asInstanceOf[Seq[_]].map(_.asInstanceOf[org.apache.spark.sql.Row])
+    val cands = candRows.map(_.getString(0)).toArray
+    val prefixes = candRows.map(_.getInt(1)).toSet
+    // a confirm-side match has an EQUAL fingerprint, hence an equal
+    // prefix — pruned ledger batches are provably match-free
+    val confirmPaths: Seq[String] =
+      if (cands.isEmpty || earlier.isEmpty) Seq.empty
+      else ledgerLeafPaths(earlier, Some(prefixes))
+    // ledger-cost telemetry: the confirm read's actual inputs (paths +
+    // bytes — the O(accepted history) raw term) and the bloom's
+    // cumulative rebuild count, so a long-horizon artifact gates the
+    // amortization claims on observations
+    ledgerLog.foreach { ll =>
+      def bytesOf(f: java.io.File): Long =
+        if (f.isDirectory)
+          Option(f.listFiles()).getOrElse(Array.empty).map(bytesOf).sum
+        else f.length()
+      ll.record(LedgerRow(batchId, earlier.size, confirmPaths.size,
+        confirmPaths.map(p => bytesOf(new java.io.File(p))).sum,
+        caches.bloom.rebuilds))
     }
+    // the two confirm lookups are independent given the candidate set
+    // (stable index vs ledger paths) — overlap them on the append
+    // carrier (guide §2.6; free before the appends start)
+    val ledgerHitsF: java.util.concurrent.Future[Array[String]] =
+      if (confirmPaths.isEmpty)
+        java.util.concurrent.CompletableFuture.completedFuture(
+          Array.empty[String])
+      else onAppendCarrier(sp) {
+        val keys = graft.functions.Utf8SortedKeys.sorted(cands)
+        val pfp = sp.read.parquet(confirmPaths: _*).select(col("__pfp"))
+        pfp.filter(GraftGlue.column(
+            graft.functions.Utf8InSortedArrayExpr(
+              GraftGlue.expression(pfp("__pfp")), keys)))
+          .collect().map(_.getString(0))
+      }
+    val stableHits: Array[String] =
+      if (cands.isEmpty) Array.empty
+      else staged("exactconfirm") { caches.index.hits(cands) }
+    val ledgerHits: Array[String] = staged("exactledger") {
+      try ledgerHitsF.get()
+      catch {
+        case e: java.util.concurrent.ExecutionException =>
+          throw e.getCause
+      }
+    }
+    val allHits = stableHits ++ ledgerHits
+    val exactKept =
+      if (allHits.isEmpty) Dedup.exact(b0, textCol, idCol)
+      else {
+        // drop = fingerprint CONFIRMED present in stable ∪ earlier
+        // ledger; null fingerprints always pass (null-text rows are
+        // per-id unique, the batch chain's rule). One row-local
+        // binary-search filter — no join, no exchange.
+        val hitKeys = graft.functions.Utf8SortedKeys.sorted(allHits)
+        val kept = b0.filter(fpCol.isNull || !GraftGlue.column(
+          graft.functions.Utf8InSortedArrayExpr(
+            GraftGlue.expression(fpCol), hitKeys)))
+        Dedup.exact(kept, textCol, idCol)
+      }
     // the near tier and the decontamination tier are PER-ROW decisions
     // against FIXED references (prior postings / benchmark grams) — a
     // row's fate never depends on in-batch peers or on the other
@@ -740,10 +679,11 @@ object RefreshPipeline {
     // union, and the survivors pay one probe-side exchange + join stage
     // instead of two.
     val nearHits = Dedup.nearIncrementalHitIds(b0, textCol, idCol,
-      numHashes = numHashes, bands = bands, threshold = threshold,
-      mode = Dedup.Portable, postings = postings)
-    val contamIds = Dedup.ngramContaminatedIds(b0, refGrams, textCol,
-      idCol, n = decontamN, minMatches = minMatches)
+      numHashes = caches.numHashes, bands = caches.bands,
+      threshold = threshold, mode = Dedup.Portable,
+      postings = caches.postings)
+    val contamIds = Dedup.ngramContaminatedIds(b0, caches.refGrams,
+      textCol, idCol, n = caches.decontamN, minMatches = minMatches)
     val dropIds = nearHits.select(col("__bid").as("__xid"))
       .unionByName(contamIds.select(col("__mid").as("__xid")))
     // the skew probe's inputs (total rows + per-shard counts of the
@@ -837,23 +777,7 @@ object RefreshPipeline {
       // micro-batch contract, so this overlaps driver/planning latency,
       // not executor capacity)
       if (indexRoot.isDefined || indexDir.isDefined) {
-        // mirror the trigger thread's Spark-local properties (job
-        // group, cancel-on-interrupt, description) onto the carrier so
-        // the index append's jobs cancel with the SAME group a serial
-        // execution would have used — the pool thread otherwise keeps
-        // whatever it inherited at creation
-        val mirrored = Seq("spark.jobGroup.id",
-            "spark.job.interruptOnCancel", "spark.job.description",
-            "spark.scheduler.pool")
-          .map(k => k -> sp.sparkContext.getLocalProperty(k))
-        val second = appendPool.submit(
-          new java.util.concurrent.Callable[Unit] {
-            override def call(): Unit = {
-              mirrored.foreach { case (k, v) =>
-                sp.sparkContext.setLocalProperty(k, v) }
-              indexAppend()
-            }
-          })
+        val second = onAppendCarrier(sp)(indexAppend())
         // always JOIN the index side before leaving the trigger (no
         // append may outlive its trigger); the first failure wins and
         // is rethrown with its ORIGINAL type (unwrapping the
@@ -934,7 +858,7 @@ object RefreshPipeline {
       // merge AFTER the ledger publish: a trigger that fails anywhere
       // above leaves the bloom at its pre-trigger state, so the retry
       // references exactly prior ∪ earlier batches again
-      staged("bloomadv") { bloomAcc.foreach { a =>
+      staged("bloomadv") {
         // the ledger write already OBSERVED the accepted fingerprints —
         // fold them into the held bloom driver-side (putString: zero
         // jobs, zero capacity-sized allocation; the DataFrame merge
@@ -945,8 +869,8 @@ object RefreshPipeline {
         val arr =
           if (acceptedArr != null) acceptedArr
           else acceptedFps.collect().map(_.getString(0))
-        a.advanceWith(batchId, arr)
-      } }
+        caches.bloom.advanceWith(batchId, arr)
+      }
     } finally
       org.apache.spark.sql.graftglue.GraftGlue
         .releaseCheckpoint(cleaned)
@@ -996,38 +920,23 @@ object RefreshPipeline {
           ledgerLog: Option[LedgerLog] = None): Unit = {
     // every prior-side derivation is trigger-invariant (the
     // incremental contract references the kept corpus only), so all
-    // three are computed ONCE here and cached across every trigger —
-    // without this, re-deriving the prior's fingerprints / minhash
-    // postings / reference grams dominates each micro-batch at corpus
-    // scale: the exact-tier fingerprints, the near-tier band postings,
-    // and the decontamination reference grams. The fingerprints are
-    // cached PRE-PARTITIONED and PRE-SORTED on __pfp (localCheckpoint
-    // preserves both), so every trigger's stable confirm join is a
-    // partition-local merge scan — zero exchange, zero sort — on the
-    // corpus side (see Dedup.exactIncrementalStaged).
-    // the exact tier's bloom accumulator: capacity sized once for the
-    // prior corpus plus generous accepted-history headroom (overflow
-    // degrades fpp, never exactness — see FingerprintBloom)
-    val (priorFps, postings, refGrams, bloomAcc, fpIndex) =
+    // are computed ONCE here and cached across every trigger — without
+    // this, re-deriving the prior's fingerprints / minhash postings /
+    // reference grams dominates each micro-batch at corpus scale
+    val caches =
       priorCaches(prior, benchmark, textCol, numHashes, bands, decontamN)
-    // provider swap, set/restored exactly as StreamJoinScale does: the
-    // session conf is read at query START, so set-before/restore-after
-    // scopes the provider to this drain
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val providerPrev = prior.sparkSession.conf.getOption(providerKey)
-    providerClass.foreach(prior.sparkSession.conf.set(providerKey, _))
+    val restoreProvider =
+      swapStateStoreProvider(prior.sparkSession, providerClass)
     var q: org.apache.spark.sql.streaming.StreamingQuery = null
     try {
       q = docs.writeStream
         .trigger(Trigger.AvailableNow())
         .option("checkpointLocation", checkpointDir)
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          processBatch(batch, batchId, prior, benchmark, priorFps,
-            postings, refGrams, storeDir, ledgerDir, budget, shardCol,
-            idCol, textCol, numHashes, bands, threshold, decontamN,
-            minMatches, indexDir, vecCol, bloomAcc = Some(bloomAcc),
-            packSkew = packSkew, routeLog = routeLog,
-            ledgerLog = ledgerLog, fpIndex = Some(fpIndex))
+          processBatch(batch, batchId, caches, storeDir, ledgerDir,
+            budget, shardCol, idCol, threshold, minMatches, indexDir,
+            vecCol, packSkew = packSkew, routeLog = routeLog,
+            ledgerLog = ledgerLog)
         }
         .start()
       q.awaitTermination()
@@ -1037,14 +946,8 @@ object RefreshPipeline {
       // frames released below — stop it first (best-effort, never over
       // the original failure) so the releases cannot race a live trigger
       if (q != null) try q.stop() catch { case _: Throwable => () }
-      if (providerClass.isDefined) providerPrev match {
-        case Some(p) => prior.sparkSession.conf.set(providerKey, p)
-        case None => prior.sparkSession.conf.unset(providerKey)
-      }
-      org.apache.spark.sql.graftglue.GraftGlue.releaseCheckpoint(priorFps)
-      org.apache.spark.sql.graftglue.GraftGlue.releaseCheckpoint(postings)
-      org.apache.spark.sql.graftglue.GraftGlue.releaseCheckpoint(refGrams)
-      fpIndex.release()
+      restoreProvider()
+      caches.release()
     }
   }
 
@@ -1118,11 +1021,10 @@ object RefreshPipeline {
       s"compactEvery must be >= 1: $compactEvery")
     require(tierFanout.forall(_ >= 2),
       s"tierFanout must be >= 2: $tierFanout")
-    val (priorFps, postings, refGrams, bloomAcc, fpIndex) =
+    val caches =
       priorCaches(prior, benchmark, textCol, numHashes, bands, decontamN)
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val providerPrev = prior.sparkSession.conf.getOption(providerKey)
-    providerClass.foreach(prior.sparkSession.conf.set(providerKey, _))
+    val restoreProvider =
+      swapStateStoreProvider(prior.sparkSession, providerClass)
     // out-of-band fold bookkeeping, mutated only from the foreachBatch
     // thread (triggers run sequentially) and read after
     // awaitTermination on the caller's thread — the query's
@@ -1180,14 +1082,11 @@ object RefreshPipeline {
         .option("checkpointLocation", checkpointDir)
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           val sp = batch.sparkSession
-          processBatch(batch, batchId, prior, benchmark, priorFps,
-            postings, refGrams, storeDir = "", ledgerDir, budget,
-            shardCol, idCol, textCol, numHashes, bands, threshold,
-            decontamN, minMatches, indexDir = None, vecCol,
-            shardRoot = Some(shardRoot), indexRoot = indexRoot,
-            bloomAcc = Some(bloomAcc), packSkew = packSkew,
-            routeLog = routeLog, ledgerLog = ledgerLog,
-            fpIndex = Some(fpIndex))
+          processBatch(batch, batchId, caches, storeDir = "", ledgerDir,
+            budget, shardCol, idCol, threshold, minMatches,
+            indexDir = None, vecCol, shardRoot = Some(shardRoot),
+            indexRoot = indexRoot, packSkew = packSkew,
+            routeLog = routeLog, ledgerLog = ledgerLog)
           finishReady(force = false)
           if ((batchId + 1) % compactEvery == 0) {
             // depth > 0 at a scheduled point = the previous point's
@@ -1255,14 +1154,8 @@ object RefreshPipeline {
         try f.abandon() catch { case _: Throwable => () }
       }
       pending.clear()
-      if (providerClass.isDefined) providerPrev match {
-        case Some(p) => prior.sparkSession.conf.set(providerKey, p)
-        case None => prior.sparkSession.conf.unset(providerKey)
-      }
-      org.apache.spark.sql.graftglue.GraftGlue.releaseCheckpoint(priorFps)
-      org.apache.spark.sql.graftglue.GraftGlue.releaseCheckpoint(postings)
-      org.apache.spark.sql.graftglue.GraftGlue.releaseCheckpoint(refGrams)
-      fpIndex.release()
+      restoreProvider()
+      caches.release()
     }
   }
 }

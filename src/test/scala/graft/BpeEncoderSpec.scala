@@ -112,6 +112,22 @@ class BpeEncoderSpec extends SparkSpec {
     }
   }
 
+  test("pair-key packing bound: 65,279 merges (largest symbol 0xFFFE) " +
+      "compile and look up exactly, 65,280 merges fail loudly") {
+    // distinct pairs over the whole 16-bit range of each component
+    val n = 0xFFFE - 255
+    val a = Array.tabulate(n)(j => (j * 7919) % (256 + j))
+    val b = Array.tabulate(n)(j => 255 + j)
+    val vocab = new BpeByteCodec.Vocab(a, b)
+    assert((0 until n).forall(j => vocab.rank(a(j), b(j)) == j))
+    // the largest symbol paired with itself must miss, not alias the
+    // empty slot
+    assert(vocab.rank(0xFFFE, 0xFFFE) == -1)
+    val e = intercept[IllegalArgumentException](
+      new BpeByteCodec.Vocab(a :+ 0, b :+ 0))
+    assert(e.getMessage.contains("65535"), e.getMessage)
+  }
+
   test("long-document cost: rank-bucketed encode beats the per-rank " +
       "full-pass reference on the committed ~1k-merge vocabulary") {
     val (pa, pb) = Bpe.pairSymbols(BpeByteVocab.merges)

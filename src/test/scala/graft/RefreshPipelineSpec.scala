@@ -18,21 +18,25 @@ class RefreshPipelineSpec extends SparkSpec {
   private def docsDF(rows: (Long, String, String)*) =
     rows.toDF("doc_id", "source", "text")
 
+  // one set of prior caches per test, built once and released after,
+  // exactly as run() seeds one per drain
+  private def withCaches[A](prior: org.apache.spark.sql.DataFrame,
+                            benchmark: org.apache.spark.sql.DataFrame)
+                           (body: RefreshPipeline.PriorCaches => A): A = {
+    val caches = RefreshPipeline.priorCaches(prior, benchmark, "text",
+      numHashes = 32, bands = 8, decontamN = 5)
+    try body(caches) finally caches.release()
+  }
+
   // drive one trigger exactly as the foreachBatch body would —
   // processBatch is the unit the streaming run() re-delivers
   private def trigger(batch: org.apache.spark.sql.DataFrame,
-                      batchId: Long, prior: org.apache.spark.sql.DataFrame,
-                      benchmark: org.apache.spark.sql.DataFrame,
+                      batchId: Long, caches: RefreshPipeline.PriorCaches,
                       base: java.nio.file.Path,
                       indexDir: Option[String] = None): Unit =
-    RefreshPipeline.processBatch(batch, batchId, prior, benchmark,
-      Dedup.exactFingerprints(prior, "text"),
-      Dedup.nearPostings(prior, "text", numHashes = 32, bands = 8,
-        mode = Dedup.Portable),
-      Dedup.ngramRefGrams(benchmark, "text", n = 5),
+    RefreshPipeline.processBatch(batch, batchId, caches,
       s"$base/store", s"$base/ledger", budget = 16,
-      shardCol = "source", idCol = "doc_id", textCol = "text",
-      numHashes = 32, bands = 8, threshold = 0.8, decontamN = 5,
+      shardCol = "source", idCol = "doc_id", threshold = 0.8,
       minMatches = 2, indexDir = indexDir, vecCol = "embedding")
 
   test("a re-delivered trigger whose ledger batch already published " +
@@ -48,7 +52,8 @@ class RefreshPipelineSpec extends SparkSpec {
       val batch = docsDF(
         (3L, "a", "echo foxtrot golf hotel india"),
         (6L, "b", "juliet kilo lima mike november"))
-      trigger(batch, 0L, prior, benchmark, base)
+      withCaches(prior, benchmark) { caches =>
+      trigger(batch, 0L, caches, base)
       def storedTokens() = ShardSink.read(spark, s"$base/store")
         .agg(sum(col("n_tokens").cast("long"))).as[Long].collect().head
       val after1 = storedTokens()
@@ -61,7 +66,7 @@ class RefreshPipelineSpec extends SparkSpec {
       // built only from batches < 0 (none), so the re-run keeps the
       // same docs, finds v1 committed, and no-ops — it must NOT see
       // its own fingerprints, drop everything, and commit nothing
-      trigger(batch, 0L, prior, benchmark, base)
+      trigger(batch, 0L, caches, base)
       assert(storedTokens() == after1)
       // and the harder half of the window: ledger published, store
       // commit LOST (crash between the two under the OLD ordering —
@@ -71,15 +76,16 @@ class RefreshPipelineSpec extends SparkSpec {
       // accepted docs are re-derived identically and the store commit
       // is REPUBLISHED, not silently skipped as an empty version.
       StoreFiles.deleteRec(new java.io.File(s"$base/store/v1"))
-      trigger(batch, 0L, prior, benchmark, base)
+      trigger(batch, 0L, caches, base)
       assert(storedTokens() == after1,
         "re-delivered trigger self-masked against its own ledger batch")
       // a LATER trigger does reference b0: the same text re-arriving
       // under a new id in batch 1 is dropped as a cross-drop duplicate
       val rebatch = docsDF((9L, "a", "echo foxtrot golf hotel india"))
-      trigger(rebatch, 1L, prior, benchmark, base)
+      trigger(rebatch, 1L, caches, base)
       assert(storedTokens() == after1,
         "later trigger failed to dedup against the accepted ledger")
+      }
     } finally rmTree(base)
   }
 
@@ -116,7 +122,8 @@ class RefreshPipelineSpec extends SparkSpec {
         .withColumn("embedding",
           transform(sequence(lit(0), lit(7)),
             i => sin(col("doc_id") * 3 + i).cast("float")))
-      trigger(batch, 0L, prior, benchmark, base,
+      withCaches(prior, benchmark) { caches =>
+      trigger(batch, 0L, caches, base,
         indexDir = Some(s"$base/ix"))
       val served = VectorIndexSink.read(spark, s"$base/ix", "doc_id")
         .encoded.select("doc_id").as[Long].collect().toSet
@@ -139,10 +146,11 @@ class RefreshPipelineSpec extends SparkSpec {
       assert(got == want)
       // re-delivery: both stores already committed their batch keys —
       // nothing doubles
-      trigger(batch, 0L, prior, benchmark, base,
+      trigger(batch, 0L, caches, base,
         indexDir = Some(s"$base/ix"))
       assert(VectorIndexSink.read(spark, s"$base/ix", "doc_id")
         .encoded.count() == 7L)
+      }
     } finally rmTree(base)
   }
 
@@ -338,19 +346,9 @@ class RefreshPipelineSpec extends SparkSpec {
         prior.withColumn("__ids",
           Bpe.byteTokenIds(col("text"), BpeByteVocab.merges)),
         "__ids", "doc_id", 16, "source", s"$base/store")
-      val bloom = new RefreshPipeline.FingerprintBloom(0.01, 1000L)
+      withCaches(prior, benchmark) { caches =>
       def bloomTrigger(batch: org.apache.spark.sql.DataFrame,
-                       id: Long): Unit =
-        RefreshPipeline.processBatch(batch, id, prior, benchmark,
-          Dedup.exactFingerprints(prior, "text"),
-          Dedup.nearPostings(prior, "text", numHashes = 32, bands = 8,
-            mode = Dedup.Portable),
-          Dedup.ngramRefGrams(benchmark, "text", n = 5),
-          s"$base/store", s"$base/ledger", budget = 16,
-          shardCol = "source", idCol = "doc_id", textCol = "text",
-          numHashes = 32, bands = 8, threshold = 0.8, decontamN = 5,
-          minMatches = 2, indexDir = None, vecCol = "embedding",
-          bloomAcc = Some(bloom))
+                       id: Long): Unit = trigger(batch, id, caches, base)
       bloomTrigger(docsDF(
         (5L, "a", "echo foxtrot golf hotel"),
         (6L, "b", "india juliet kilo lima")), 0L)
@@ -415,6 +413,7 @@ class RefreshPipelineSpec extends SparkSpec {
         == Seq(new java.io.File(partitioned, "__pp=5").getAbsolutePath))
       assert(RefreshPipeline.ledgerLeafPaths(
         Seq(partitioned), Some(Set(6))).isEmpty)
+      }
     } finally rmTree(base)
   }
 
@@ -429,19 +428,9 @@ class RefreshPipelineSpec extends SparkSpec {
         prior.withColumn("__ids",
           Bpe.byteTokenIds(col("text"), BpeByteVocab.merges)),
         "__ids", "doc_id", 16, "source", s"$base/store")
-      val bloom = new RefreshPipeline.FingerprintBloom(0.01, 1000L)
+      withCaches(prior, benchmark) { caches =>
       def bloomTrigger(batch: org.apache.spark.sql.DataFrame,
-                       id: Long): Unit =
-        RefreshPipeline.processBatch(batch, id, prior, benchmark,
-          Dedup.exactFingerprints(prior, "text"),
-          Dedup.nearPostings(prior, "text", numHashes = 32, bands = 8,
-            mode = Dedup.Portable),
-          Dedup.ngramRefGrams(benchmark, "text", n = 5),
-          s"$base/store", s"$base/ledger", budget = 16,
-          shardCol = "source", idCol = "doc_id", textCol = "text",
-          numHashes = 32, bands = 8, threshold = 0.8, decontamN = 5,
-          minMatches = 2, indexDir = None, vecCol = "embedding",
-          bloomAcc = Some(bloom))
+                       id: Long): Unit = trigger(batch, id, caches, base)
       bloomTrigger(docsDF((5L, "a", "echo foxtrot golf hotel")), 0L)
       // trigger 1 is the watermark-flush no-data batch
       bloomTrigger(docsDF().limit(0), 1L)
@@ -470,6 +459,51 @@ class RefreshPipelineSpec extends SparkSpec {
       bloomTrigger(docsDF().limit(0), 1L)
       assert(storeVersions() == Seq("v0", "v1", "v3")
         && ledgerBatches() == Seq(0L, 2L))
+      }
+    } finally rmTree(base)
+  }
+
+  test("a non-empty cross-store trigger through processBatch runs a " +
+      "pinned number of Spark jobs") {
+    // trigger 1 of a cross-store drain, with the held bloom from
+    // trigger 0: it carries a dup of a trigger-0 accept (ledger
+    // confirm), a dup of the prior (index confirm) and a fresh doc.
+    // 24 is the count the bloom + index exact tier ran before it
+    // became processBatch's only path
+    val base = java.nio.file.Files.createTempDirectory("graft_rpj_")
+    try {
+      val emb = transform(sequence(lit(0), lit(7)),
+        i => sin(col("doc_id") * 3 + i).cast("float"))
+      val prior = docsDF(
+        (1L, "a", "alpha bravo charlie delta"),
+        (2L, "b", "echo foxtrot golf hotel"),
+        (3L, "a", "mike november oscar papa"),
+        (4L, "b", "quebec romeo sierra tango"))
+      ShardSink.append(spark,
+        prior.withColumn("__ids",
+          Bpe.byteTokenIds(col("text"), BpeByteVocab.merges)),
+        "__ids", "doc_id", 16, "source", s"$base/store")
+      Similarity.ivfPqSave(
+        Similarity.ivfPqBuild(prior.withColumn("embedding", emb),
+          nLists = 2, m = 2, kCodes = 4, iterations = 2,
+          idCol = "doc_id"),
+        s"$base/ix")
+      withCaches(prior, prior.limit(0)) { caches =>
+        def crossTrigger(batch: org.apache.spark.sql.DataFrame,
+                         id: Long): Unit =
+          trigger(batch.withColumn("embedding", emb), id, caches, base,
+            indexDir = Some(s"$base/ix"))
+        crossTrigger(docsDF((9L, "a", "india juliet kilo lima"),
+          (10L, "b", "alpha bravo charlie delta")), 0L)
+        val (_, jobs) = jobsOf(crossTrigger(docsDF(
+          (11L, "a", "india juliet kilo lima"),
+          (12L, "b", "uniform victor whiskey xray"),
+          (13L, "a", "echo foxtrot golf hotel")), 1L))
+        assert(jobs == 24, s"trigger 1 ran $jobs Spark jobs, want 24")
+        val ledgered = spark.read.parquet(s"$base/ledger/b1").count()
+        assert(ledgered == 1L,
+          s"trigger 1 accepted $ledgered fps, want only the fresh doc")
+      }
     } finally rmTree(base)
   }
 
