@@ -21,6 +21,7 @@ import graft.streaming.StreamingNearDup
   *  - ties in any top-k / keep-latest are broken by a unique id.
   */
 object SparkEntry {
+  import StagedDrops.deleteRecursively
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") {
@@ -81,13 +82,6 @@ object SparkEntry {
       // localCheckpoint so the result survives the temp-dir cleanup below
       agg(s.read.parquet(s"$base/out")).localCheckpoint(true)
     } finally deleteRecursively(base)
-  }
-
-  private def deleteRecursively(base: java.nio.file.Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    java.nio.file.Files.walk(base).sorted(
-        java.util.Comparator.reverseOrder[java.nio.file.Path]())
-      .iterator().asScala.foreach(p => java.nio.file.Files.deleteIfExists(p))
   }
 
   /** File-source stream over one fixture table with a CONSTANT event-time
@@ -871,8 +865,8 @@ object SparkEntry {
     "q160_streaming_index" -> ((s, dir) => {
       // q159's frozen-codebook append driven by the REAL micro-batch
       // engine (the FAISS-plus-message-bus ingest pattern): the new
-      // slice (vec_id % 5 == 0) arrives as two id-ordered micro-batches
-      // (maxFilesPerTrigger=1 over range-split files), each landed by
+      // slice (vec_id % 5 == 0) arrives as two id-ordered drops, one
+      // per trigger (StagedDrops' layout), each landed by
       // VectorIndexSink as an atomic, batchId-keyed delta directory
       // next to the saved prior-slice index — codebooks frozen, base
       // never read on the append path. Encode is row-local and
@@ -889,27 +883,9 @@ object SparkEntry {
         val newSlice = emb.filter(col("vec_id") % 5 === 0)
           .localCheckpoint(true)
         try {
-          val maxId = newSlice.agg(max(col("vec_id"))).collect()(0)
-            .getLong(0)
-          (0 until 2).foreach { k =>
-            val lo = maxId * k / 2; val hi = maxId * (k + 1) / 2
-            val part = newSlice.filter(
-              col("vec_id") > (if (k == 0) -1L else lo)
-                && col("vec_id") <= hi)
-            val tmp = s"$base/tmp$k"
-            part.coalesce(1).write.parquet(tmp)
-            val f = new java.io.File(tmp).listFiles()
-              .filter(_.getName.endsWith(".parquet")).head
-            val dst = new java.io.File(s"$base/in/b$k.parquet")
-            dst.getParentFile.mkdirs()
-            java.nio.file.Files.move(f.toPath, dst.toPath)
-            dst.setLastModified(1700000000000L + k * 60000L)
-          }
-          val sch = s.read.parquet(s"$base/in").schema
-          val stream = s.readStream.schema(sch)
-            .option("maxFilesPerTrigger", "1")
-            .option("latestFirst", "false")
-            .parquet(s"$base/in")
+          StagedDrops.stageAll(StagedDrops.idCuts(newSlice, "vec_id", 2)
+            .drops(newSlice, "vec_id"), s"$base/in")
+          val stream = StagedDrops.open(s, s"$base/in")
           graft.streaming.VectorIndexSink.run(stream, base.toString,
             checkpointDir = s"$base/ck")
           val served = graft.streaming.VectorIndexSink.read(s,
@@ -1034,12 +1010,8 @@ object SparkEntry {
             Bpe.byteTokenIds(col("text"), BpeByteVocab.merges))
           .localCheckpoint(true)
         try {
-          val maxId = d.agg(max(col("doc_id"))).collect()(0).getLong(0)
-          val cuts = (0 to 3).map(k => maxId * k / 3)
-          (0 until 3).foreach { k =>
-            val part = d.filter(
-              col("doc_id") > cuts(k) - (if (k == 0) 1 else 0)
-                && col("doc_id") <= cuts(k + 1))
+          val drops = StagedDrops.idCuts(d, "doc_id", 3).drops(d, "doc_id")
+          drops.foreach { part =>
             graft.streaming.ShardSink.append(s, part, "__ids", "doc_id",
               budget = 2048, shardCol = "source",
               storeDir = s"$base/store")
@@ -1075,12 +1047,8 @@ object SparkEntry {
             Bpe.byteTokenIds(col("text"), BpeByteVocab.merges))
           .localCheckpoint(true)
         try {
-          val maxId = d.agg(max(col("doc_id"))).collect()(0).getLong(0)
-          val cuts = (0 to 3).map(k => maxId * k / 3)
-          (0 until 3).foreach { k =>
-            val part = d.filter(
-              col("doc_id") > cuts(k) - (if (k == 0) 1 else 0)
-                && col("doc_id") <= cuts(k + 1))
+          val drops = StagedDrops.idCuts(d, "doc_id", 3).drops(d, "doc_id")
+          drops.foreach { part =>
             graft.streaming.ShardSink.append(s, part, "__ids", "doc_id",
               budget = 2048, shardCol = "source",
               storeDir = s"$base/store")
@@ -1098,8 +1066,8 @@ object SparkEntry {
 
     "q167_streaming_cdc_index" -> ((s, dir) => {
       // CDC into the serving index through the REAL micro-batch engine:
-      // three change batches arrive as maxFilesPerTrigger=1 files in
-      // mtime order (upsert the %5 slice; delete %7==1 while upserting
+      // three change batches arrive as three drops, one per trigger in
+      // staging order (StagedDrops' layout) (upsert the %5 slice; delete %7==1 while upserting
       // %13==2 in the SAME trigger; re-upsert the even deleted half).
       // runCdc publishes tombstone d<2T> (deletes + upsert self-masks)
       // then append b<2T+1> per trigger — FAISS remove-then-add as
@@ -1125,23 +1093,9 @@ object SparkEntry {
           emb.filter(col("vec_id") % 7 === 1
               && col("vec_id") % 2 === 0)
             .withColumn("op", lit("upsert")))
-        batches.zipWithIndex.foreach { case (b, k) =>
-          val tmp = s"$base/tmp$k"
-          b.coalesce(1).write.parquet(tmp)
-          val f = new java.io.File(tmp).listFiles()
-            .filter(_.getName.endsWith(".parquet")).head
-          val dst = new java.io.File(s"$base/in/b$k.parquet")
-          dst.getParentFile.mkdirs()
-          java.nio.file.Files.move(f.toPath, dst.toPath)
-          dst.setLastModified(1700000000000L + k * 60000L)
-        }
-        val sch = s.read.parquet(s"$base/in").schema
-        val stream = s.readStream.schema(sch)
-          .option("maxFilesPerTrigger", "1")
-          .option("latestFirst", "false")
-          .parquet(s"$base/in")
-        graft.streaming.VectorIndexSink.runCdc(stream, base.toString,
-          s"$base/ck")
+        StagedDrops.stageAll(batches, s"$base/in")
+        graft.streaming.VectorIndexSink.runCdc(
+          StagedDrops.open(s, s"$base/in"), base.toString, s"$base/ck")
         val served = graft.streaming.VectorIndexSink.read(s,
           base.toString)
         Similarity.ivfPqQuery(served, emb.filter(col("vec_id") < 4),
@@ -1153,7 +1107,8 @@ object SparkEntry {
     "q168_streaming_refresh" -> ((s, dir) => {
       // the weekly crawl refresh END-TO-END on the STREAMING engine:
       // q155's five-stage chain with the new corpus slice (doc_id%3==0)
-      // arriving as three id-ordered micro-batches. Per trigger,
+      // arriving as three id-ordered drops (StagedDrops' one drop per
+      // trigger). Per trigger,
       // RefreshPipeline runs exact incremental dedup against
       // prior ∪ previously-accepted stream docs (global first-writer-
       // wins via its ledger), near dedup + 5-gram decontamination
@@ -1162,59 +1117,28 @@ object SparkEntry {
       // v0. The final merged STORE view must equal the one-shot pack of
       // prior + exactly the docs the batch chain keeps — q155's replay
       // with the full-store projection, every sequence md5-pinned.
-      val base =
-        java.nio.file.Files.createTempDirectory("graft_srefresh_")
-      try {
-        val d = t(s, dir, "documents").filter(col("text").isNotNull)
-          .select(col("doc_id"), col("source"), col("text"))
+      StagedDrops.withCorpus(t(s, dir, "documents"),
+          "graft_srefresh_") { c =>
+        val base = c.base
+        val tSeed = System.nanoTime()
+        StagedDrops.seedPrior(c.prior, s"$base/store", None)
+        Bench.recordComponent("q168_seed_prior_pack",
+          (System.nanoTime() - tSeed) / 1e9)
+        StagedDrops.stageAll(StagedDrops.idCuts(c.newDocs, "doc_id", 3)
+          .drops(c.newDocs, "doc_id"), s"$base/in")
+        val stream = StagedDrops.open(s, s"$base/in")
+        val tDrain = System.nanoTime()
+        graft.streaming.RefreshPipeline.run(stream, c.prior, c.benchmark,
+          storeDir = s"$base/store", ledgerDir = s"$base/ledger",
+          checkpointDir = s"$base/ck")
+        Bench.recordComponent("q168_stream_drain",
+          (System.nanoTime() - tDrain) / 1e9)
+        graft.streaming.ShardSink.read(s, s"$base/store")
+          .select(col("source"), col("seq_id"),
+            col("n_tokens").cast("long").as("n_tokens"),
+            md5(Bpe.idsString(col("token_ids"))).as("ids_md5"))
           .localCheckpoint(true)
-        try {
-          val prior = d.filter(col("doc_id") % 3 =!= 0)
-          val newDocs = d.filter(col("doc_id") % 3 === 0)
-          val tSeed = System.nanoTime()
-          graft.streaming.ShardSink.append(s,
-            prior.withColumn("__ids",
-              Bpe.byteTokenIds(col("text"), BpeByteVocab.merges)),
-            "__ids", "doc_id", budget = 2048, shardCol = "source",
-            storeDir = s"$base/store") // the prior pack at v0
-          Bench.recordComponent("q168_seed_prior_pack",
-            (System.nanoTime() - tSeed) / 1e9)
-          val maxId = newDocs.agg(max(col("doc_id")))
-            .collect()(0).getLong(0)
-          val cuts = (0 to 3).map(k => maxId * k / 3)
-          (0 until 3).foreach { k =>
-            val part = newDocs.filter(
-              col("doc_id") > cuts(k) - (if (k == 0) 1 else 0)
-                && col("doc_id") <= cuts(k + 1))
-            val tmp = s"$base/tmp$k"
-            part.coalesce(1).write.parquet(tmp)
-            val f = new java.io.File(tmp).listFiles()
-              .filter(_.getName.endsWith(".parquet")).head
-            val dst = new java.io.File(s"$base/in/b$k.parquet")
-            dst.getParentFile.mkdirs()
-            java.nio.file.Files.move(f.toPath, dst.toPath)
-            dst.setLastModified(1700000000000L + k * 60000L)
-          }
-          val sch = s.read.parquet(s"$base/in").schema
-          val stream = s.readStream.schema(sch)
-            .option("maxFilesPerTrigger", "1")
-            .option("latestFirst", "false")
-            .parquet(s"$base/in")
-          val tDrain = System.nanoTime()
-          graft.streaming.RefreshPipeline.run(stream, prior,
-            prior.filter(col("doc_id") % 17 === 3),
-            storeDir = s"$base/store", ledgerDir = s"$base/ledger",
-            checkpointDir = s"$base/ck")
-          Bench.recordComponent("q168_stream_drain",
-            (System.nanoTime() - tDrain) / 1e9)
-          graft.streaming.ShardSink.read(s, s"$base/store")
-            .select(col("source"), col("seq_id"),
-              col("n_tokens").cast("long").as("n_tokens"),
-              md5(Bpe.idsString(col("token_ids"))).as("ids_md5"))
-            .localCheckpoint(true)
-        } finally
-          org.apache.spark.sql.graftglue.GraftGlue.releaseCheckpoint(d)
-      } finally deleteRecursively(base)
+      }
     }),
 
     "q169_store_retention" -> ((s, dir) => {
@@ -1238,11 +1162,8 @@ object SparkEntry {
             Bpe.byteTokenIds(col("text"), BpeByteVocab.merges))
           .localCheckpoint(true)
         try {
-          val maxId = d.agg(max(col("doc_id"))).collect()(0).getLong(0)
-          val cuts = (0 to 3).map(k => maxId * k / 3)
-          def drop(k: Int) = d.filter(
-            col("doc_id") > cuts(k) - (if (k == 0) 1 else 0)
-              && col("doc_id") <= cuts(k + 1))
+          val cuts = StagedDrops.idCuts(d, "doc_id", 3)
+          def drop(k: Int) = cuts.drop(d, "doc_id", k)
           (0 until 2).foreach { k =>
             graft.streaming.ShardSink.append(s, drop(k), "__ids",
               "doc_id", budget = 2048, shardCol = "source",
@@ -1315,73 +1236,24 @@ object SparkEntry {
       // tier is absent from BOTH stores) cross-joined with a canonical
       // digest of the whole shard store view, so one oracle row set
       // checks id-set agreement AND store content.
-      val base =
-        java.nio.file.Files.createTempDirectory("graft_xrefresh_")
-      try {
-        val emb = transform(sequence(lit(0), lit(7)),
-          i => sin(col("doc_id") * 3 + i).cast("float"))
-        val d = t(s, dir, "documents").filter(col("text").isNotNull)
-          .select(col("doc_id"), col("source"), col("text"))
-          .localCheckpoint(true)
-        try {
-          val prior = d.filter(col("doc_id") % 3 =!= 0)
-          val newDocs = d.filter(col("doc_id") % 3 === 0)
-          graft.streaming.ShardSink.append(s,
-            prior.withColumn("__ids",
-              Bpe.byteTokenIds(col("text"), BpeByteVocab.merges)),
-            "__ids", "doc_id", budget = 2048, shardCol = "source",
-            storeDir = s"$base/store") // the prior pack at v0
-          Similarity.ivfPqSave( // the prior corpus as the index base
-            Similarity.ivfPqBuild(prior.withColumn("embedding", emb),
-              vecCol = "embedding", idCol = "doc_id", nLists = 4,
-              m = 4, kCodes = 8, iterations = 2),
-            s"$base/ix")
-          val maxId = newDocs.agg(max(col("doc_id")))
-            .collect()(0).getLong(0)
-          val cuts = (0 to 3).map(k => maxId * k / 3)
-          (0 until 3).foreach { k =>
-            val part = newDocs.filter(
-              col("doc_id") > cuts(k) - (if (k == 0) 1 else 0)
-                && col("doc_id") <= cuts(k + 1))
-            val tmp = s"$base/tmp$k"
-            part.coalesce(1).write.parquet(tmp)
-            val f = new java.io.File(tmp).listFiles()
-              .filter(_.getName.endsWith(".parquet")).head
-            val dst = new java.io.File(s"$base/in/b$k.parquet")
-            dst.getParentFile.mkdirs()
-            java.nio.file.Files.move(f.toPath, dst.toPath)
-            dst.setLastModified(1700000000000L + k * 60000L)
-          }
-          val sch = s.read.parquet(s"$base/in").schema
-          val stream = s.readStream.schema(sch)
-            .option("maxFilesPerTrigger", "1")
-            .option("latestFirst", "false")
-            .parquet(s"$base/in")
-            .withColumn("embedding", emb)
-          val tDrain = System.nanoTime()
-          graft.streaming.RefreshPipeline.run(stream, prior,
-            prior.filter(col("doc_id") % 17 === 3),
-            storeDir = s"$base/store", ledgerDir = s"$base/ledger",
-            checkpointDir = s"$base/ck",
-            indexDir = Some(s"$base/ix"))
-          Bench.recordComponent("q170_stream_drain",
-            (System.nanoTime() - tDrain) / 1e9)
-          val digest = graft.streaming.ShardSink.read(s, s"$base/store")
-            .select(concat_ws("|",
-              coalesce(col("source"), lit("<null>")),
-              col("seq_id").cast("string"),
-              col("n_tokens").cast("long").cast("string"),
-              md5(Bpe.idsString(col("token_ids")))).as("p"))
-            .agg(md5(concat_ws(";",
-              sort_array(collect_list(col("p"))))).as("store_digest"))
-          graft.streaming.VectorIndexSink
-            .read(s, s"$base/ix", idCol = "doc_id")
-            .encoded.select(col("doc_id"))
-            .crossJoin(broadcast(digest))
-            .localCheckpoint(true)
-        } finally
-          org.apache.spark.sql.graftglue.GraftGlue.releaseCheckpoint(d)
-      } finally deleteRecursively(base)
+      StagedDrops.withCorpus(t(s, dir, "documents"),
+          "graft_xrefresh_") { c =>
+        val base = c.base
+        StagedDrops.seedPrior(c.prior, s"$base/store", Some(s"$base/ix"))
+        StagedDrops.stageAll(StagedDrops.idCuts(c.newDocs, "doc_id", 3)
+          .drops(c.newDocs, "doc_id"), s"$base/in")
+        val stream = StagedDrops.open(s, s"$base/in")
+          .withColumn("embedding", StagedDrops.emb)
+        val tDrain = System.nanoTime()
+        graft.streaming.RefreshPipeline.run(stream, c.prior, c.benchmark,
+          storeDir = s"$base/store", ledgerDir = s"$base/ledger",
+          checkpointDir = s"$base/ck", indexDir = Some(s"$base/ix"))
+        Bench.recordComponent("q170_stream_drain",
+          (System.nanoTime() - tDrain) / 1e9)
+        StagedDrops.crossStore(graft.streaming.VectorIndexSink
+            .read(s, s"$base/ix", idCol = "doc_id"),
+          graft.streaming.ShardSink.read(s, s"$base/store"))
+      }
     }),
 
     "q171_cross_store_asof" -> ((s, dir) => {
@@ -1396,68 +1268,35 @@ object SparkEntry {
       // survivors, and the store snapshot's digest equals the pack of
       // exactly those docs (id-ordered drops are prefix-closed, so the
       // restricted replay reproduces the mid-history decisions).
-      val base = java.nio.file.Files.createTempDirectory("graft_xasof_")
-      try {
-        val emb = transform(sequence(lit(0), lit(7)),
-          i => sin(col("doc_id") * 3 + i).cast("float"))
-        val d = t(s, dir, "documents").filter(col("text").isNotNull)
-          .select(col("doc_id"), col("source"), col("text"))
-          .localCheckpoint(true)
+      StagedDrops.withCorpus(t(s, dir, "documents"),
+          "graft_xasof_") { c =>
+        val base = c.base
+        StagedDrops.seedPrior(c.prior, s"$base/store", Some(s"$base/ix"))
+        val cuts = StagedDrops.idCuts(c.newDocs, "doc_id", 3)
+        val tDrops = System.nanoTime()
+        // the trigger-invariant prior caches, built by the same
+        // RefreshPipeline.priorCaches that run seeds a drain with
+        val caches = graft.streaming.RefreshPipeline.priorCaches(
+          c.prior, c.benchmark, textCol = "text", numHashes = 32,
+          bands = 8, decontamN = 5)
         try {
-          val prior = d.filter(col("doc_id") % 3 =!= 0)
-          val benchmark = prior.filter(col("doc_id") % 17 === 3)
-          val newDocs = d.filter(col("doc_id") % 3 === 0)
-          graft.streaming.ShardSink.append(s,
-            prior.withColumn("__ids",
-              Bpe.byteTokenIds(col("text"), BpeByteVocab.merges)),
-            "__ids", "doc_id", budget = 2048, shardCol = "source",
-            storeDir = s"$base/store")
-          Similarity.ivfPqSave(
-            Similarity.ivfPqBuild(prior.withColumn("embedding", emb),
-              vecCol = "embedding", idCol = "doc_id", nLists = 4,
-              m = 4, kCodes = 8, iterations = 2),
-            s"$base/ix")
-          val maxId = newDocs.agg(max(col("doc_id")))
-            .collect()(0).getLong(0)
-          val cuts = (0 to 3).map(k => maxId * k / 3)
-          val tDrops = System.nanoTime()
-          // the trigger-invariant prior caches, built by the same
-          // RefreshPipeline.priorCaches that run seeds a drain with
-          val caches = graft.streaming.RefreshPipeline.priorCaches(
-            prior, benchmark, textCol = "text", numHashes = 32,
-            bands = 8, decontamN = 5)
-          try {
-            (0 until 3).foreach { k =>
-              graft.streaming.RefreshPipeline.processBatch(
-                newDocs.filter(
-                    col("doc_id") > cuts(k) - (if (k == 0) 1 else 0)
-                      && col("doc_id") <= cuts(k + 1))
-                  .withColumn("embedding", emb),
-                k.toLong, caches, s"$base/store", s"$base/ledger",
-                budget = 2048, shardCol = "source", idCol = "doc_id",
-                threshold = 0.8, minMatches = 2,
-                indexDir = Some(s"$base/ix"), vecCol = "embedding")
-            }
-          } finally caches.release()
-          Bench.recordComponent("q171_three_drops",
-            (System.nanoTime() - tDrops) / 1e9)
-          val digest = graft.streaming.ShardSink
-            .read(s, s"$base/store", asOf = Some(2L))
-            .select(concat_ws("|",
-              coalesce(col("source"), lit("<null>")),
-              col("seq_id").cast("string"),
-              col("n_tokens").cast("long").cast("string"),
-              md5(Bpe.idsString(col("token_ids")))).as("p"))
-            .agg(md5(concat_ws(";",
-              sort_array(collect_list(col("p"))))).as("store_digest"))
-          graft.streaming.VectorIndexSink
-            .read(s, s"$base/ix", idCol = "doc_id", asOf = Some(1L))
-            .encoded.select(col("doc_id"))
-            .crossJoin(broadcast(digest))
-            .localCheckpoint(true)
-        } finally
-          org.apache.spark.sql.graftglue.GraftGlue.releaseCheckpoint(d)
-      } finally deleteRecursively(base)
+          (0 until 3).foreach { k =>
+            graft.streaming.RefreshPipeline.processBatch(
+              cuts.drop(c.newDocs, "doc_id", k)
+                .withColumn("embedding", StagedDrops.emb),
+              k.toLong, caches, s"$base/store", s"$base/ledger",
+              budget = 2048, shardCol = "source", idCol = "doc_id",
+              threshold = 0.8, minMatches = 2,
+              indexDir = Some(s"$base/ix"), vecCol = "embedding")
+          }
+        } finally caches.release()
+        Bench.recordComponent("q171_three_drops",
+          (System.nanoTime() - tDrops) / 1e9)
+        StagedDrops.crossStore(graft.streaming.VectorIndexSink
+            .read(s, s"$base/ix", idCol = "doc_id", asOf = Some(1L)),
+          graft.streaming.ShardSink.read(s, s"$base/store",
+            asOf = Some(2L)))
+      }
     }),
 
     "q173_attributed_refresh" -> ((s, dir) => {
@@ -1480,108 +1319,59 @@ object SparkEntry {
       // refreshCtes' newPred and pins q170's two cross-store outputs:
       // served index ids x the shard-store digest. If the join leaked
       // an out-of-window click or dropped a pair, the id sets diverge.
-      val base =
-        java.nio.file.Files.createTempDirectory("graft_attref_")
-      try {
-        val emb = transform(sequence(lit(0), lit(7)),
-          i => sin(col("doc_id") * 3 + i).cast("float"))
-        val d = t(s, dir, "documents").filter(col("text").isNotNull)
+      StagedDrops.withCorpus(t(s, dir, "documents"),
+          "graft_attref_") { c =>
+        val base = c.base
+        StagedDrops.seedPrior(c.prior, s"$base/store", Some(s"$base/ix"))
+        // stage the engagement streams as three aligned id-ranged
+        // drop pairs (event time strictly increases with doc_id, so
+        // no trigger's rows can fall behind the global watermark)
+        val views = c.newDocs.select(col("doc_id").as("v_uid"),
+          col("doc_id").as("vid"),
+          timestamp_seconds(lit(86400L) + col("doc_id")).as("v_ts"))
+        val clicks = c.newDocs.filter(col("doc_id") % 5 =!= 2)
+          .select(col("doc_id").as("c_uid"), col("doc_id").as("cid"),
+            timestamp_seconds(lit(86400L) + col("doc_id")
+              + (col("doc_id") % 8) * 3300).as("c_ts"))
+        val cuts = StagedDrops.idCuts(c.newDocs, "doc_id", 3)
+        StagedDrops.stageAll(cuts.drops(views, "v_uid"), s"$base/views")
+        StagedDrops.stageAll(cuts.drops(clicks, "c_uid"), s"$base/clicks")
+        def src(sub: String, tsCol: String): DataFrame =
+          StagedDrops.open(s, s"$base/$sub")
+            .withWatermark(tsCol, "500 milliseconds")
+        val attributed = src("views", "v_ts").join(
+          src("clicks", "c_ts"),
+          col("v_uid") === col("c_uid") &&
+            col("c_ts") >= col("v_ts") &&
+            col("c_ts") <= col("v_ts") + expr("INTERVAL 6 HOURS"),
+          "inner")
+        val docsStream = attributed
+          .join(broadcast(c.docs), col("v_uid") === col("doc_id"))
           .select(col("doc_id"), col("source"), col("text"))
-          .localCheckpoint(true)
-        try {
-          val prior = d.filter(col("doc_id") % 3 =!= 0)
-          val newDocs = d.filter(col("doc_id") % 3 === 0)
-          graft.streaming.ShardSink.append(s,
-            prior.withColumn("__ids",
-              Bpe.byteTokenIds(col("text"), BpeByteVocab.merges)),
-            "__ids", "doc_id", budget = 2048, shardCol = "source",
-            storeDir = s"$base/store") // the prior pack at v0
-          Similarity.ivfPqSave( // the prior corpus as the index base
-            Similarity.ivfPqBuild(prior.withColumn("embedding", emb),
-              vecCol = "embedding", idCol = "doc_id", nLists = 4,
-              m = 4, kCodes = 8, iterations = 2),
-            s"$base/ix")
-          // stage the engagement streams as three aligned id-ranged
-          // file pairs (event time strictly increases with doc_id, so
-          // no trigger's rows can fall behind the global watermark)
-          val views = newDocs.select(col("doc_id").as("v_uid"),
-            col("doc_id").as("vid"),
-            timestamp_seconds(lit(86400L) + col("doc_id")).as("v_ts"))
-          val clicks = newDocs.filter(col("doc_id") % 5 =!= 2)
-            .select(col("doc_id").as("c_uid"), col("doc_id").as("cid"),
-              timestamp_seconds(lit(86400L) + col("doc_id")
-                + (col("doc_id") % 8) * 3300).as("c_ts"))
-          val maxId = newDocs.agg(max(col("doc_id")))
-            .collect()(0).getLong(0)
-          val cuts = (0 to 3).map(k => maxId * k / 3)
-          def stage(df: DataFrame, sub: String, idc: String): Unit =
-            (0 until 3).foreach { k =>
-              val part = df.filter(
-                col(idc) > cuts(k) - (if (k == 0) 1 else 0)
-                  && col(idc) <= cuts(k + 1))
-              val tmp = s"$base/tmp-$sub-$k"
-              part.coalesce(1).write.parquet(tmp)
-              val f = new java.io.File(tmp).listFiles()
-                .filter(_.getName.endsWith(".parquet")).head
-              val dst = new java.io.File(s"$base/$sub/b$k.parquet")
-              dst.getParentFile.mkdirs()
-              java.nio.file.Files.move(f.toPath, dst.toPath)
-              dst.setLastModified(1700000000000L + k * 60000L)
-              ()
-            }
-          stage(views, "views", "v_uid")
-          stage(clicks, "clicks", "c_uid")
-          def src(sub: String, tsCol: String): DataFrame =
-            s.readStream.schema(s.read.parquet(s"$base/$sub").schema)
-              .option("maxFilesPerTrigger", "1")
-              .option("latestFirst", "false")
-              .parquet(s"$base/$sub")
-              .withWatermark(tsCol, "500 milliseconds")
-          val attributed = src("views", "v_ts").join(
-            src("clicks", "c_ts"),
-            col("v_uid") === col("c_uid") &&
-              col("c_ts") >= col("v_ts") &&
-              col("c_ts") <= col("v_ts") + expr("INTERVAL 6 HOURS"),
-            "inner")
-          val docsStream = attributed
-            .join(broadcast(d), col("v_uid") === col("doc_id"))
-            .select(col("doc_id"), col("source"), col("text"))
-            .withColumn("embedding", emb)
-          val tDrain = System.nanoTime()
-          // state partitions sized to the fixture: the join keys are
-          // ~500/trigger, and every batch-plan execution pays a state
-          // store load+commit PER partition PER store (4 stores/side
-          // pair) — 32 partitions is pure fixed overhead here. A
-          // production deployment sizes this to its throughput; the
-          // conf is read once at query start and restored after the
-          // drain.
-          val prevSp = s.conf.get("spark.sql.shuffle.partitions")
-          s.conf.set("spark.sql.shuffle.partitions", "8")
-          try
-            graft.streaming.RefreshPipeline.run(docsStream, prior,
-              prior.filter(col("doc_id") % 17 === 3),
-              storeDir = s"$base/store", ledgerDir = s"$base/ledger",
-              checkpointDir = s"$base/ck",
-              indexDir = Some(s"$base/ix"))
-          finally s.conf.set("spark.sql.shuffle.partitions", prevSp)
-          Bench.recordComponent("q173_stream_drain",
-            (System.nanoTime() - tDrain) / 1e9)
-          val digest = graft.streaming.ShardSink.read(s, s"$base/store")
-            .select(concat_ws("|",
-              coalesce(col("source"), lit("<null>")),
-              col("seq_id").cast("string"),
-              col("n_tokens").cast("long").cast("string"),
-              md5(Bpe.idsString(col("token_ids")))).as("p"))
-            .agg(md5(concat_ws(";",
-              sort_array(collect_list(col("p"))))).as("store_digest"))
-          graft.streaming.VectorIndexSink
-            .read(s, s"$base/ix", idCol = "doc_id")
-            .encoded.select(col("doc_id"))
-            .crossJoin(broadcast(digest))
-            .localCheckpoint(true)
-        } finally
-          org.apache.spark.sql.graftglue.GraftGlue.releaseCheckpoint(d)
-      } finally deleteRecursively(base)
+          .withColumn("embedding", StagedDrops.emb)
+        val tDrain = System.nanoTime()
+        // state partitions sized to the fixture: the join keys are
+        // ~500/trigger, and every batch-plan execution pays a state
+        // store load+commit PER partition PER store (4 stores/side
+        // pair) — 32 partitions is pure fixed overhead here. A
+        // production deployment sizes this to its throughput; the
+        // conf is read once at query start and restored after the
+        // drain.
+        val prevSp = s.conf.get("spark.sql.shuffle.partitions")
+        s.conf.set("spark.sql.shuffle.partitions", "8")
+        try
+          graft.streaming.RefreshPipeline.run(docsStream, c.prior,
+            c.benchmark,
+            storeDir = s"$base/store", ledgerDir = s"$base/ledger",
+            checkpointDir = s"$base/ck",
+            indexDir = Some(s"$base/ix"))
+        finally s.conf.set("spark.sql.shuffle.partitions", prevSp)
+        Bench.recordComponent("q173_stream_drain",
+          (System.nanoTime() - tDrain) / 1e9)
+        StagedDrops.crossStore(graft.streaming.VectorIndexSink
+            .read(s, s"$base/ix", idCol = "doc_id"),
+          graft.streaming.ShardSink.read(s, s"$base/store"))
+      }
     }),
 
     "q174_resumed_refresh" -> ((s, dir) => {
@@ -1601,83 +1391,37 @@ object SparkEntry {
       // q170's two cross-store outputs — a pipeline that forgot its
       // ledger across the restart would serve the replay ids and shift
       // the store digest.
-      val base =
-        java.nio.file.Files.createTempDirectory("graft_resref_")
-      try {
-        val emb = transform(sequence(lit(0), lit(7)),
-          i => sin(col("doc_id") * 3 + i).cast("float"))
-        val d = t(s, dir, "documents").filter(col("text").isNotNull)
-          .select(col("doc_id"), col("source"), col("text"))
-          .localCheckpoint(true)
-        try {
-          val prior = d.filter(col("doc_id") % 3 =!= 0)
-          val newDocs = d.filter(col("doc_id") % 3 === 0)
-          graft.streaming.ShardSink.append(s,
-            prior.withColumn("__ids",
-              Bpe.byteTokenIds(col("text"), BpeByteVocab.merges)),
-            "__ids", "doc_id", budget = 2048, shardCol = "source",
-            storeDir = s"$base/store")
-          Similarity.ivfPqSave(
-            Similarity.ivfPqBuild(prior.withColumn("embedding", emb),
-              vecCol = "embedding", idCol = "doc_id", nLists = 4,
-              m = 4, kCodes = 8, iterations = 2),
-            s"$base/ix")
-          val maxId = newDocs.agg(max(col("doc_id")))
-            .collect()(0).getLong(0)
-          val cuts = (0 to 4).map(k => maxId * k / 4)
-          def stage(k: Int, part: DataFrame): Unit = {
-            val tmp = s"$base/tmp$k"
-            part.coalesce(1).write.parquet(tmp)
-            val f = new java.io.File(tmp).listFiles()
-              .filter(_.getName.endsWith(".parquet")).head
-            val dst = new java.io.File(s"$base/in/b$k.parquet")
-            dst.getParentFile.mkdirs()
-            java.nio.file.Files.move(f.toPath, dst.toPath)
-            dst.setLastModified(1700000000000L + k * 60000L)
-            ()
-          }
-          def drop(k: Int): DataFrame = newDocs.filter(
-            col("doc_id") > cuts(k) - (if (k == 0) 1 else 0)
-              && col("doc_id") <= cuts(k + 1))
-          def drain(): Unit = {
-            val stream = s.readStream
-              .schema(s.read.parquet(s"$base/in").schema)
-              .option("maxFilesPerTrigger", "1")
-              .option("latestFirst", "false")
-              .parquet(s"$base/in")
-              .withColumn("embedding", emb)
-            graft.streaming.RefreshPipeline.run(stream, prior,
-              prior.filter(col("doc_id") % 17 === 3),
-              storeDir = s"$base/store", ledgerDir = s"$base/ledger",
-              checkpointDir = s"$base/ck",
-              indexDir = Some(s"$base/ix"))
-          }
-          val tD = System.nanoTime()
-          stage(0, drop(0)); stage(1, drop(1))
-          drain() // session 1: batch ids 0,1
-          stage(2, drop(2))
-          stage(3, drop(3).unionByName( // replays of session 1's drop 0
-            drop(0).filter(col("doc_id") % 7 === 1)
-              .withColumn("doc_id", col("doc_id") + 9999999L)))
-          drain() // session 2, SAME checkpoint: batch ids resume at 2
-          Bench.recordComponent("q174_two_drains",
-            (System.nanoTime() - tD) / 1e9)
-          val digest = graft.streaming.ShardSink.read(s, s"$base/store")
-            .select(concat_ws("|",
-              coalesce(col("source"), lit("<null>")),
-              col("seq_id").cast("string"),
-              col("n_tokens").cast("long").cast("string"),
-              md5(Bpe.idsString(col("token_ids")))).as("p"))
-            .agg(md5(concat_ws(";",
-              sort_array(collect_list(col("p"))))).as("store_digest"))
-          graft.streaming.VectorIndexSink
-            .read(s, s"$base/ix", idCol = "doc_id")
-            .encoded.select(col("doc_id"))
-            .crossJoin(broadcast(digest))
-            .localCheckpoint(true)
-        } finally
-          org.apache.spark.sql.graftglue.GraftGlue.releaseCheckpoint(d)
-      } finally deleteRecursively(base)
+      StagedDrops.withCorpus(t(s, dir, "documents"),
+          "graft_resref_") { c =>
+        val base = c.base
+        StagedDrops.seedPrior(c.prior, s"$base/store", Some(s"$base/ix"))
+        val cuts = StagedDrops.idCuts(c.newDocs, "doc_id", 4)
+        def drop(k: Int): DataFrame = cuts.drop(c.newDocs, "doc_id", k)
+        def stage(k: Int, part: DataFrame): Unit =
+          StagedDrops.stage(part, s"$base/in", k)
+        def drain(): Unit = {
+          val stream = StagedDrops.open(s, s"$base/in")
+            .withColumn("embedding", StagedDrops.emb)
+          graft.streaming.RefreshPipeline.run(stream, c.prior,
+            c.benchmark,
+            storeDir = s"$base/store", ledgerDir = s"$base/ledger",
+            checkpointDir = s"$base/ck",
+            indexDir = Some(s"$base/ix"))
+        }
+        val tD = System.nanoTime()
+        stage(0, drop(0)); stage(1, drop(1))
+        drain() // session 1: batch ids 0,1
+        stage(2, drop(2))
+        stage(3, drop(3).unionByName( // replays of session 1's drop 0
+          drop(0).filter(col("doc_id") % 7 === 1)
+            .withColumn("doc_id", col("doc_id") + 9999999L)))
+        drain() // session 2, SAME checkpoint: batch ids resume at 2
+        Bench.recordComponent("q174_two_drains",
+          (System.nanoTime() - tD) / 1e9)
+        StagedDrops.crossStore(graft.streaming.VectorIndexSink
+            .read(s, s"$base/ix", idCol = "doc_id"),
+          graft.streaming.ShardSink.read(s, s"$base/store"))
+      }
     }),
 
     "q175_managed_refresh" -> ((s, dir) => {
@@ -1694,100 +1438,52 @@ object SparkEntry {
       // the oracle can't see: both roots ended on generation 1, the
       // retired generation-0 layouts fail loudly, and an asOf below
       // each root's retention floor (shard v2 / index b2) is refused.
-      val base = java.nio.file.Files.createTempDirectory("graft_mrefresh_")
-      try {
-        val emb = transform(sequence(lit(0), lit(7)),
-          i => sin(col("doc_id") * 3 + i).cast("float"))
-        val d = t(s, dir, "documents").filter(col("text").isNotNull)
-          .select(col("doc_id"), col("source"), col("text"))
-          .localCheckpoint(true)
-        try {
-          val prior = d.filter(col("doc_id") % 3 =!= 0)
-          val newDocs = d.filter(col("doc_id") % 3 === 0)
-          val sRoot = s"$base/sroot"; val iRoot = s"$base/iroot"
-          graft.streaming.ShardSink.append(s,
-            prior.withColumn("__ids",
-              Bpe.byteTokenIds(col("text"), BpeByteVocab.merges)),
-            "__ids", "doc_id", budget = 2048, shardCol = "source",
-            storeDir = graft.streaming.StoreRoot.init(sRoot))
-          Similarity.ivfPqSave(
-            Similarity.ivfPqBuild(prior.withColumn("embedding", emb),
-              vecCol = "embedding", idCol = "doc_id", nLists = 4,
-              m = 4, kCodes = 8, iterations = 2),
-            graft.streaming.StoreRoot.init(iRoot))
-          val maxId = newDocs.agg(max(col("doc_id")))
-            .collect()(0).getLong(0)
-          val cuts = (0 to 3).map(k => maxId * k / 3)
-          (0 until 3).foreach { k =>
-            val part = newDocs.filter(
-              col("doc_id") > cuts(k) - (if (k == 0) 1 else 0)
-                && col("doc_id") <= cuts(k + 1))
-            val tmp = s"$base/tmp$k"
-            part.coalesce(1).write.parquet(tmp)
-            val f = new java.io.File(tmp).listFiles()
-              .filter(_.getName.endsWith(".parquet")).head
-            val dst = new java.io.File(s"$base/in/b$k.parquet")
-            dst.getParentFile.mkdirs()
-            java.nio.file.Files.move(f.toPath, dst.toPath)
-            dst.setLastModified(1700000000000L + k * 60000L)
-          }
-          val sch = s.read.parquet(s"$base/in").schema
-          val stream = s.readStream.schema(sch)
-            .option("maxFilesPerTrigger", "1")
-            .option("latestFirst", "false")
-            .parquet(s"$base/in")
-            .withColumn("embedding", emb)
-          val tDrain = System.nanoTime()
-          graft.streaming.RefreshPipeline.runManaged(stream, prior,
-            prior.filter(col("doc_id") % 17 === 3),
-            shardRoot = sRoot, ledgerDir = s"$base/ledger",
-            checkpointDir = s"$base/ck", compactEvery = 2,
-            indexRoot = Some(iRoot))
-          Bench.recordComponent("q175_managed_drain",
-            (System.nanoTime() - tDrain) / 1e9)
-          // the retention gates: one mid-stream cycle ran on each root
-          // (gen 1 current, floors at the folded high-water marks),
-          // the predecessors fail loudly, below-floor asOf is refused
-          require(graft.streaming.StoreRoot.currentGen(sRoot) == 1L
-              && graft.streaming.StoreRoot.currentGen(iRoot) == 1L,
-            "expected exactly one mid-stream compaction cycle per root")
-          // shard fold cut at its compaction point (v0..v2 -> floor
-          // 2); the index fold is SERIALIZED behind it (one fold in
-          // flight across both roots), so its cut includes the last
-          // trigger's arm b2 -> floor 2 as well
-          require(graft.streaming.StoreRoot.floor(sRoot).contains(2L)
-              && graft.streaming.StoreRoot.floor(iRoot).contains(2L),
-            "unexpected retention floors after the mid-stream fold")
-          def loud(f: => Any, what: String): Unit = {
-            val msg = try { f; "" } catch {
-              case e: IllegalStateException => e.getMessage }
-            require(msg.nonEmpty, s"$what should have failed loudly")
-          }
-          loud(graft.streaming.ShardSink.read(s, s"$sRoot/gen0")
-            .collect(), "reading the retired shard gen0")
-          loud(graft.streaming.VectorIndexSink.read(s, s"$iRoot/gen0",
-            idCol = "doc_id"), "reading the retired index gen0")
-          loud(graft.streaming.StoreRoot.readShard(s, sRoot,
-            asOf = Some(1L)), "shard asOf below the floor")
-          loud(graft.streaming.StoreRoot.readVectors(s, iRoot,
-            idCol = "doc_id", asOf = Some(0L)),
-            "index asOf below the floor")
-          val digest = graft.streaming.StoreRoot.readShard(s, sRoot)
-            .select(concat_ws("|",
-              coalesce(col("source"), lit("<null>")),
-              col("seq_id").cast("string"),
-              col("n_tokens").cast("long").cast("string"),
-              md5(Bpe.idsString(col("token_ids")))).as("p"))
-            .agg(md5(concat_ws(";",
-              sort_array(collect_list(col("p"))))).as("store_digest"))
-          graft.streaming.StoreRoot
-            .readVectors(s, iRoot, idCol = "doc_id")
-            .encoded.select(col("doc_id"))
-            .crossJoin(broadcast(digest))
-            .localCheckpoint(true)
-        } finally
-          org.apache.spark.sql.graftglue.GraftGlue.releaseCheckpoint(d)
-      } finally deleteRecursively(base)
+      StagedDrops.withCorpus(t(s, dir, "documents"),
+          "graft_mrefresh_") { c =>
+        val base = c.base
+        val sRoot = s"$base/sroot"; val iRoot = s"$base/iroot"
+        StagedDrops.seedPrior(c.prior,
+          graft.streaming.StoreRoot.init(sRoot),
+          Some(graft.streaming.StoreRoot.init(iRoot)))
+        StagedDrops.stageAll(StagedDrops.idCuts(c.newDocs, "doc_id", 3)
+          .drops(c.newDocs, "doc_id"), s"$base/in")
+        val stream = StagedDrops.open(s, s"$base/in")
+          .withColumn("embedding", StagedDrops.emb)
+        val tDrain = System.nanoTime()
+        graft.streaming.RefreshPipeline.runManaged(stream, c.prior,
+          c.benchmark,
+          shardRoot = sRoot, ledgerDir = s"$base/ledger",
+          checkpointDir = s"$base/ck", compactEvery = 2,
+          indexRoot = Some(iRoot))
+        Bench.recordComponent("q175_managed_drain",
+          (System.nanoTime() - tDrain) / 1e9)
+        // the retention gates: one mid-stream cycle ran on each root
+        // (gen 1 current, floors at the folded high-water marks),
+        // the predecessors fail loudly, below-floor asOf is refused
+        require(graft.streaming.StoreRoot.currentGen(sRoot) == 1L
+            && graft.streaming.StoreRoot.currentGen(iRoot) == 1L,
+          "expected exactly one mid-stream compaction cycle per root")
+        // shard fold cut at its compaction point (v0..v2 -> floor
+        // 2); the index fold is SERIALIZED behind it (one fold in
+        // flight across both roots), so its cut includes the last
+        // trigger's arm b2 -> floor 2 as well
+        require(graft.streaming.StoreRoot.floor(sRoot).contains(2L)
+            && graft.streaming.StoreRoot.floor(iRoot).contains(2L),
+          "unexpected retention floors after the mid-stream fold")
+        StagedDrops.loud(graft.streaming.ShardSink.read(s,
+          s"$sRoot/gen0").collect(), "reading the retired shard gen0")
+        StagedDrops.loud(graft.streaming.VectorIndexSink.read(s,
+          s"$iRoot/gen0", idCol = "doc_id"),
+          "reading the retired index gen0")
+        StagedDrops.loud(graft.streaming.StoreRoot.readShard(s, sRoot,
+          asOf = Some(1L)), "shard asOf below the floor")
+        StagedDrops.loud(graft.streaming.StoreRoot.readVectors(s, iRoot,
+          idCol = "doc_id", asOf = Some(0L)),
+          "index asOf below the floor")
+        StagedDrops.crossStore(graft.streaming.StoreRoot
+            .readVectors(s, iRoot, idCol = "doc_id"),
+          graft.streaming.StoreRoot.readShard(s, sRoot))
+      }
     }),
 
     "q176_windowed_retention" -> ((s, dir) => {
@@ -1803,107 +1499,72 @@ object SparkEntry {
       // still apply on top of the fold), floors land at v2/b1 (not
       // the latest — the window held them open), one step below each
       // floor is refused, and the gen0 layouts are retired.
-      val base = java.nio.file.Files.createTempDirectory("graft_wret_")
-      try {
-        val emb = transform(sequence(lit(0), lit(7)),
-          i => sin(col("doc_id") * 3 + i).cast("float"))
-        val d = t(s, dir, "documents").filter(col("text").isNotNull)
-          .select(col("doc_id"), col("source"), col("text"))
-          .localCheckpoint(true)
+      StagedDrops.withCorpus(t(s, dir, "documents"),
+          "graft_wret_") { c =>
+        val base = c.base
+        val sRoot = s"$base/sroot"; val iRoot = s"$base/iroot"
+        StagedDrops.seedPrior(c.prior,
+          graft.streaming.StoreRoot.init(sRoot),
+          Some(graft.streaming.StoreRoot.init(iRoot)))
+        val cuts = StagedDrops.idCuts(c.newDocs, "doc_id", 3)
+        val tDrops = System.nanoTime()
+        val caches = graft.streaming.RefreshPipeline.priorCaches(
+          c.prior, c.benchmark, textCol = "text", numHashes = 32,
+          bands = 8, decontamN = 5)
         try {
-          val prior = d.filter(col("doc_id") % 3 =!= 0)
-          val benchmark = prior.filter(col("doc_id") % 17 === 3)
-          val newDocs = d.filter(col("doc_id") % 3 === 0)
-          val sRoot = s"$base/sroot"; val iRoot = s"$base/iroot"
-          graft.streaming.ShardSink.append(s,
-            prior.withColumn("__ids",
-              Bpe.byteTokenIds(col("text"), BpeByteVocab.merges)),
-            "__ids", "doc_id", budget = 2048, shardCol = "source",
-            storeDir = graft.streaming.StoreRoot.init(sRoot))
-          Similarity.ivfPqSave(
-            Similarity.ivfPqBuild(prior.withColumn("embedding", emb),
-              vecCol = "embedding", idCol = "doc_id", nLists = 4,
-              m = 4, kCodes = 8, iterations = 2),
-            graft.streaming.StoreRoot.init(iRoot))
-          val maxId = newDocs.agg(max(col("doc_id")))
-            .collect()(0).getLong(0)
-          val cuts = (0 to 3).map(k => maxId * k / 3)
-          val tDrops = System.nanoTime()
-          val caches = graft.streaming.RefreshPipeline.priorCaches(
-            prior, benchmark, textCol = "text", numHashes = 32,
-            bands = 8, decontamN = 5)
-          try {
-            (0 until 3).foreach { k =>
-              graft.streaming.RefreshPipeline.processBatch(
-                newDocs.filter(
-                    col("doc_id") > cuts(k) - (if (k == 0) 1 else 0)
-                      && col("doc_id") <= cuts(k + 1))
-                  .withColumn("embedding", emb),
-                k.toLong, caches, storeDir = "", s"$base/ledger",
-                budget = 2048, shardCol = "source", idCol = "doc_id",
-                threshold = 0.8, minMatches = 2, indexDir = None,
-                vecCol = "embedding", shardRoot = Some(sRoot),
-                indexRoot = Some(iRoot))
-            }
-          } finally caches.release()
-          Bench.recordComponent("q176_three_drops",
-            (System.nanoTime() - tDrops) / 1e9)
-          def storeDigest(asOf: Option[Long]) =
-            graft.streaming.StoreRoot.readShard(s, sRoot, asOf = asOf)
-              .select(concat_ws("|",
-                coalesce(col("source"), lit("<null>")),
-                col("seq_id").cast("string"),
-                col("n_tokens").cast("long").cast("string"),
-                md5(Bpe.idsString(col("token_ids")))).as("p"))
-              .agg(md5(concat_ws(";",
-                sort_array(collect_list(col("p"))))).as("store_digest"))
-          def servedIdsMd5(asOf: Option[Long]) = graft.streaming.StoreRoot
-            .readVectors(s, iRoot, idCol = "doc_id", asOf = asOf)
-            .encoded.select(col("doc_id").cast("string").as("i"))
-            .agg(md5(concat_ws(";", sort_array(collect_list(col("i"))))))
-            .collect()(0).getString(0)
-          val fullBefore = storeDigest(None).collect()(0).getString(0)
-          val idsBefore = servedIdsMd5(None)
-          // one windowed cycle on each root: keep the newest delta live
-          require(graft.streaming.StoreRoot.compactShard(s, sRoot,
-            keep = 1), "shard compaction should have folded")
-          require(graft.streaming.StoreRoot.compactVectors(s, iRoot,
-            keep = 1, idCol = "doc_id"),
-            "index compaction should have folded")
-          require(graft.streaming.StoreRoot.currentGen(sRoot) == 1L
-              && graft.streaming.StoreRoot.currentGen(iRoot) == 1L,
-            "expected one compaction cycle per root")
-          require(graft.streaming.StoreRoot.floor(sRoot).contains(2L)
-              && graft.streaming.StoreRoot.floor(iRoot).contains(1L),
-            "the keep=1 window should hold the floor one step below " +
-              "the latest version/batch")
-          require(storeDigest(None).collect()(0).getString(0)
-              == fullBefore,
-            "the windowed fold moved the full store view")
-          require(servedIdsMd5(None) == idsBefore,
-            "the windowed fold moved the served index view")
-          def loud(f: => Any, what: String): Unit = {
-            val msg = try { f; "" } catch {
-              case e: IllegalStateException => e.getMessage }
-            require(msg.nonEmpty, s"$what should have failed loudly")
+          (0 until 3).foreach { k =>
+            graft.streaming.RefreshPipeline.processBatch(
+              cuts.drop(c.newDocs, "doc_id", k)
+                .withColumn("embedding", StagedDrops.emb),
+              k.toLong, caches, storeDir = "", s"$base/ledger",
+              budget = 2048, shardCol = "source", idCol = "doc_id",
+              threshold = 0.8, minMatches = 2, indexDir = None,
+              vecCol = "embedding", shardRoot = Some(sRoot),
+              indexRoot = Some(iRoot))
           }
-          loud(graft.streaming.ShardSink.read(s, s"$sRoot/gen0")
-            .collect(), "reading the retired shard gen0")
-          loud(graft.streaming.StoreRoot.readShard(s, sRoot,
-            asOf = Some(1L)), "shard asOf below the floor")
-          loud(graft.streaming.StoreRoot.readVectors(s, iRoot,
-            idCol = "doc_id", asOf = Some(0L)),
-            "index asOf below the floor")
-          // the paired mid-history snapshots, now AT the floors —
-          // q171's oracle pins them bit-identically
-          graft.streaming.StoreRoot
-            .readVectors(s, iRoot, idCol = "doc_id", asOf = Some(1L))
-            .encoded.select(col("doc_id"))
-            .crossJoin(broadcast(storeDigest(Some(2L))))
-            .localCheckpoint(true)
-        } finally
-          org.apache.spark.sql.graftglue.GraftGlue.releaseCheckpoint(d)
-      } finally deleteRecursively(base)
+        } finally caches.release()
+        Bench.recordComponent("q176_three_drops",
+          (System.nanoTime() - tDrops) / 1e9)
+        def storeDigest(asOf: Option[Long]) = StagedDrops.storeDigest(
+          graft.streaming.StoreRoot.readShard(s, sRoot, asOf = asOf))
+        def servedIdsMd5(asOf: Option[Long]) = graft.streaming.StoreRoot
+          .readVectors(s, iRoot, idCol = "doc_id", asOf = asOf)
+          .encoded.select(col("doc_id").cast("string").as("i"))
+          .agg(md5(concat_ws(";", sort_array(collect_list(col("i"))))))
+          .collect()(0).getString(0)
+        val fullBefore = storeDigest(None).collect()(0).getString(0)
+        val idsBefore = servedIdsMd5(None)
+        // one windowed cycle on each root: keep the newest delta live
+        require(graft.streaming.StoreRoot.compactShard(s, sRoot,
+          keep = 1), "shard compaction should have folded")
+        require(graft.streaming.StoreRoot.compactVectors(s, iRoot,
+          keep = 1, idCol = "doc_id"),
+          "index compaction should have folded")
+        require(graft.streaming.StoreRoot.currentGen(sRoot) == 1L
+            && graft.streaming.StoreRoot.currentGen(iRoot) == 1L,
+          "expected one compaction cycle per root")
+        require(graft.streaming.StoreRoot.floor(sRoot).contains(2L)
+            && graft.streaming.StoreRoot.floor(iRoot).contains(1L),
+          "the keep=1 window should hold the floor one step below " +
+            "the latest version/batch")
+        require(storeDigest(None).collect()(0).getString(0)
+            == fullBefore,
+          "the windowed fold moved the full store view")
+        require(servedIdsMd5(None) == idsBefore,
+          "the windowed fold moved the served index view")
+        StagedDrops.loud(graft.streaming.ShardSink.read(s,
+          s"$sRoot/gen0").collect(), "reading the retired shard gen0")
+        StagedDrops.loud(graft.streaming.StoreRoot.readShard(s, sRoot,
+          asOf = Some(1L)), "shard asOf below the floor")
+        StagedDrops.loud(graft.streaming.StoreRoot.readVectors(s, iRoot,
+          idCol = "doc_id", asOf = Some(0L)),
+          "index asOf below the floor")
+        // the paired mid-history snapshots, now AT the floors —
+        // q171's oracle pins them bit-identically
+        StagedDrops.crossStore(graft.streaming.StoreRoot
+            .readVectors(s, iRoot, idCol = "doc_id", asOf = Some(1L)),
+          graft.streaming.StoreRoot.readShard(s, sRoot, asOf = Some(2L)))
+      }
     }),
 
     "q165_index_retrain" -> ((s, dir) => {
@@ -2237,8 +1898,7 @@ object SparkEntry {
     "q157_streaming_shards" -> ((s, dir) => {
       // q154's O(batch) shard append as a REAL micro-batch sink
       // (round-10 stretch #8): the corpus arrives as four id-ordered
-      // micro-batches (maxFilesPerTrigger=1 over four range-split
-      // files, modification times forcing arrival order); each batch is
+      // drops, one per trigger (StagedDrops' layout); each batch is
       // tokenized in-stream and appended as a DELTA-ONLY version to the
       // parquet shard store by packTokenIdsIncremental inside
       // foreachBatch (write volume O(batch), not O(store)). Because
@@ -2246,44 +1906,23 @@ object SparkEntry {
       // one-shot packTokenIds of the whole corpus — q147's corpus-wide
       // md5 oracle, now pinning a store the STREAMING ENGINE built
       // through four incremental appends.
-      val base = java.nio.file.Files.createTempDirectory("graft_shards_")
-      try {
-        val d = t(s, dir, "documents").filter(col("text").isNotNull)
-          .select(col("doc_id"), col("source"), col("text"))
+      StagedDrops.withCorpus(t(s, dir, "documents"),
+          "graft_shards_") { c =>
+        val base = c.base
+        StagedDrops.stageAll(StagedDrops.idCuts(c.docs, "doc_id", 4)
+          .drops(c.docs, "doc_id"), s"$base/in")
+        val stream = StagedDrops.open(s, s"$base/in")
+          .withColumn("__ids",
+            Bpe.byteTokenIds(col("text"), BpeByteVocab.merges))
+        graft.streaming.ShardSink.run(stream, "__ids", "doc_id",
+          budget = 2048, shardCol = "source",
+          storeDir = s"$base/store", checkpointDir = s"$base/ck")
+        graft.streaming.ShardSink.read(s, s"$base/store")
+          .select(col("source"), col("seq_id"),
+            col("n_tokens").cast("long").as("n_tokens"),
+            md5(Bpe.idsString(col("token_ids"))).as("ids_md5"))
           .localCheckpoint(true)
-        try {
-          val maxId = d.agg(max(col("doc_id"))).collect()(0).getLong(0)
-          val cuts = (0 to 4).map(k => maxId * k / 4)
-          (0 until 4).foreach { k =>
-            val part = d.filter(col("doc_id") > cuts(k) - (if (k == 0) 1 else 0)
-              && col("doc_id") <= cuts(k + 1))
-            val tmp = s"$base/tmp$k"
-            part.coalesce(1).write.parquet(tmp)
-            val f = new java.io.File(tmp).listFiles()
-              .filter(_.getName.endsWith(".parquet")).head
-            val dst = new java.io.File(s"$base/in/b$k.parquet")
-            dst.getParentFile.mkdirs()
-            java.nio.file.Files.move(f.toPath, dst.toPath)
-            dst.setLastModified(1700000000000L + k * 60000L)
-          }
-          val sch = s.read.parquet(s"$base/in").schema
-          val stream = s.readStream.schema(sch)
-            .option("maxFilesPerTrigger", "1")
-            .option("latestFirst", "false")
-            .parquet(s"$base/in")
-            .withColumn("__ids",
-              Bpe.byteTokenIds(col("text"), BpeByteVocab.merges))
-          graft.streaming.ShardSink.run(stream, "__ids", "doc_id",
-            budget = 2048, shardCol = "source",
-            storeDir = s"$base/store", checkpointDir = s"$base/ck")
-          graft.streaming.ShardSink.read(s, s"$base/store")
-            .select(col("source"), col("seq_id"),
-              col("n_tokens").cast("long").as("n_tokens"),
-              md5(Bpe.idsString(col("token_ids"))).as("ids_md5"))
-            .localCheckpoint(true)
-        } finally
-          org.apache.spark.sql.graftglue.GraftGlue.releaseCheckpoint(d)
-      } finally deleteRecursively(base)
+      }
     }),
 
     "q156_avi_frames" -> ((s, dir) => {

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import graft.operators.Dedup
 import graft.functions.{Bpe, BpeByteVocab}
 
@@ -456,6 +457,10 @@ object RefreshPipeline {
   /** Sidecar marker name: `bits=<16-hex-char bitmap>`. */
   private[graft] val PrefixMarker = "_graft_prefixes"
 
+  /** Every ledger batch layout's one column. Reading with it declared
+    * runs no parquet schema-inference job. */
+  private val LedgerSchema = StructType(Seq(StructField("__pfp", StringType)))
+
   /** Paths of the given ledger batch dirs, pruned to those whose
     * prefix bitmap intersects `prefixes` when given (None = all — the
     * bloom-rebuild reference must cover everything). Legacy layouts
@@ -547,7 +552,7 @@ object RefreshPipeline {
     val rebuildRef = ledgerLeafPaths(earlier, None) match {
       case Seq() => caches.priorFps
       case paths => caches.priorFps.unionByName(
-        sp.read.parquet(paths: _*).select(col("__pfp")))
+        sp.read.schema(LedgerSchema).parquet(paths: _*))
     }
     val candObs = org.apache.spark.sql.Observation(s"cands-b$batchId")
     val probe = GraftGlue.column(graft.functions.BloomMightContainExpr(
@@ -633,7 +638,7 @@ object RefreshPipeline {
           Array.empty[String])
       else onAppendCarrier(sp) {
         val keys = graft.functions.Utf8SortedKeys.sorted(cands)
-        val pfp = sp.read.parquet(confirmPaths: _*).select(col("__pfp"))
+        val pfp = sp.read.schema(LedgerSchema).parquet(confirmPaths: _*)
         pfp.filter(GraftGlue.column(
             graft.functions.Utf8InSortedArrayExpr(
               GraftGlue.expression(pfp("__pfp")), keys)))

@@ -184,8 +184,6 @@ object AnnScale {
   def main(args: Array[String]): Unit = {
     val maxN = args.headOption.map(_.toLong).getOrElse(1000000L)
     val out = args.lift(1).getOrElse("ANN_SCALE.json")
-    val scaleRuns =
-      sys.env.get("SPARK_GRAFT_SCALE_RUNS").map(_.toInt).getOrElse(2)
     val spark = SparkSession.builder()
       .master("local[32]")
       .config("spark.driver.memory", "48g")

@@ -3,8 +3,9 @@ package graft.tools
 import java.nio.file.{Files, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.StagedDrops
 import graft.functions.{Bpe, BpeByteVocab}
-import graft.operators.{Dedup, Similarity}
+import graft.operators.Dedup
 import graft.streaming.{RefreshPipeline, ShardSink, VectorIndexSink}
 
 /** Real crash injection for the refresh chain. The pipeline's crash
@@ -93,11 +94,12 @@ object CrashHarness {
     "java.base/sun.security.action", "java.base/sun.util.calendar",
   ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
 
-  /** Stage one iteration's fixtures under `base`: seeded stores (v0
-    * pack + IVF-PQ base) and the id-ordered per-trigger doc files the
-    * child will stream. Also computes the one-shot oracle digests the
-    * heal is gated on. Returns (expected-id digest, expected mass,
-    * expected ledger digest). */
+  /** Stage one iteration's fixtures under `base`: seeded stores
+    * ([[StagedDrops.seedPrior]]) and the child's stream, one drop per
+    * trigger in id order ([[StagedDrops.stage]]'s layout). Also
+    * computes the one-shot oracle digests the heal is gated on.
+    * Returns (expected-id digest, expected mass, expected ledger
+    * digest). */
   private def stage(spark: SparkSession, base: Path, prior: Long,
                     triggers: Int, batchRows: Long,
                     managed: Boolean = false)
@@ -114,31 +116,8 @@ object CrashHarness {
         if (!managed) (s"$base/store", s"$base/ix")
         else (graft.streaming.StoreRoot.init(s"$base/shardRoot"),
           graft.streaming.StoreRoot.init(s"$base/ixRoot"))
-      ShardSink.append(spark,
-        d.withColumn("__ids",
-          Bpe.byteTokenIds(col("text"), BpeByteVocab.merges)),
-        "__ids", "doc_id", budget = 2048, shardCol = "source",
-        storeDir = storeDir)
-      Similarity.ivfPqSave(
-        Similarity.ivfPqBuild(d.withColumn("embedding", RefreshScale.emb),
-          vecCol = "embedding", idCol = "doc_id", nLists = 4, m = 4,
-          kCodes = 8, iterations = 2),
-        ixDir)
-      (0 until triggers).foreach { t =>
-        val tmp = s"$base/tmp-$t"
-        all.filter(col("__u") >= t * batchRows &&
-            col("__u") < (t + 1) * batchRows)
-          .select(col("doc_id"), col("source"), col("text"))
-          .withColumn("embedding", RefreshScale.emb)
-          .coalesce(1).write.parquet(tmp)
-        val f = new java.io.File(tmp).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        val dst = new java.io.File(s"$base/docs/d$t.parquet")
-        dst.getParentFile.mkdirs()
-        Files.move(f.toPath, dst.toPath)
-        dst.setLastModified(1700000000000L + t * 60000L)
-        ()
-      }
+      StagedDrops.seedPrior(d, storeDir, Some(ixDir))
+      RefreshScale.stageDrops(all, s"$base/docs", triggers, batchRows)
       // the one-shot batch chain — the heal's oracle
       val expected = Dedup.ngramDecontaminate(
           Dedup.nearIncremental(
@@ -193,11 +172,7 @@ object CrashHarness {
     spark.sparkContext.setLogLevel("ERROR")
     val d = RefreshScale.priorDocs(spark, prior).localCheckpoint(true)
     val bench = RefreshScale.benchDocs(spark).localCheckpoint(true)
-    val stream = spark.readStream
-      .schema(spark.read.parquet(s"$base/docs").schema)
-      .option("maxFilesPerTrigger", "1")
-      .option("latestFirst", "false")
-      .parquet(s"$base/docs")
+    val stream = StagedDrops.open(spark, s"$base/docs")
     println("[crash-child] drain-start")
     System.out.flush()
     compactEvery match {
@@ -417,11 +392,7 @@ object CrashHarness {
     val tHeal = System.nanoTime()
     val d = RefreshScale.priorDocs(spark, prior)
     val bench = RefreshScale.benchDocs(spark)
-    val stream = spark.readStream
-      .schema(spark.read.parquet(s"$base/docs").schema)
-      .option("maxFilesPerTrigger", "1")
-      .option("latestFirst", "false")
-      .parquet(s"$base/docs")
+    val stream = StagedDrops.open(spark, s"$base/docs")
     compactEvery match {
       case Some(ce) =>
         RefreshPipeline.runManaged(stream, d, bench,

@@ -74,8 +74,6 @@ object LedgerHorizon {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    val scaleRuns =
-      sys.env.get("SPARK_GRAFT_SCALE_RUNS").map(_.toInt).getOrElse(2)
     val passes = (1 to scaleRuns).map { i =>
       val ll = new RefreshPipeline.LedgerLog
       val r = RefreshScale.run(spark, prior, triggers, batchRows,

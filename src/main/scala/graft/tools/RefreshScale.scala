@@ -4,8 +4,9 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQueryListener
+import graft.StagedDrops
 import graft.functions.{Bpe, BpeByteVocab}
-import graft.operators.{Dedup, Similarity}
+import graft.operators.Dedup
 import graft.streaming.{RefreshPipeline, ShardSink, VectorIndexSink}
 
 /** Once-per-round refresh-chain scale-evidence run — the ANN_SCALE /
@@ -158,9 +159,17 @@ object RefreshScale {
         src.as("source"), text.as("text"))
   }
 
-  private[graft] def emb: Column =
-    transform(sequence(lit(0), lit(7)),
-      i => sin(col("doc_id") * 3 + i).cast("float"))
+  /** Stage [[streamDocs]] `all` as `triggers` drops of `batchRows`
+    * docs each, in id order ([[StagedDrops.stage]]'s layout), with
+    * their [[StagedDrops.emb]] vectors. */
+  private[graft] def stageDrops(all: DataFrame, streamDir: String,
+                                triggers: Int, batchRows: Long): Unit =
+    (0 until triggers).foreach { t =>
+      StagedDrops.stage(all.filter(col("__u") >= t * batchRows &&
+          col("__u") < (t + 1) * batchRows)
+        .select(col("doc_id"), col("source"), col("text"))
+        .withColumn("embedding", StagedDrops.emb), streamDir, t)
+    }
 
   /** (count, wrapping sum of a 60-bit md5 prefix) over a single string
     * column — an order-independent set digest; both sides of each
@@ -175,7 +184,11 @@ object RefreshScale {
 
   /** Drive the cross-store refresh chain over `triggers x batchRows`
     * synthetic stream docs against a `prior`-doc corpus, verifying
-    * nothing yet — [[check]] holds the contracts.
+    * nothing yet — [[check]] holds the contracts. Both stores are
+    * seeded by [[StagedDrops.seedPrior]]; the stream is staged by
+    * [[stageDrops]], so trigger t drains exactly stream docs
+    * `[t * batchRows, (t + 1) * batchRows)` (the [[StagedDrops]]
+    * contract).
     *
     * Variant knobs for the skew / state-store evidence legs (defaults
     * reproduce the REFRESH_SCALE/REFRESH_SLOPE shape exactly):
@@ -221,43 +234,13 @@ object RefreshScale {
             graft.streaming.StoreRoot.init(s"$base/ixRoot"))
         case None => (s"$base/store", s"$base/ix")
       }
-      ShardSink.append(spark,
-        d.withColumn("__ids",
-          Bpe.byteTokenIds(col("text"), BpeByteVocab.merges)),
-        "__ids", "doc_id", budget = 2048, shardCol = "source",
-        storeDir = seedStore)
-      Similarity.ivfPqSave(
-        Similarity.ivfPqBuild(d.withColumn("embedding", emb),
-          vecCol = "embedding", idCol = "doc_id",
-          nLists = if (big) 32 else 4, m = 4,
-          kCodes = if (big) 16 else 8, iterations = 2),
-        seedIx)
-      // stage the stream as `triggers` id-ranged parquet files with
-      // ascending mtimes so maxFilesPerTrigger=1 + latestFirst=false
-      // yields one trigger per drop, in id order
+      StagedDrops.seedPrior(d, seedStore, Some(seedIx),
+        nLists = if (big) 32 else 4, kCodes = if (big) 16 else 8)
       val all = streamDocs(spark, prior, n, batchRows, hotPct)
         .localCheckpoint(true)
       try {
-        (0 until triggers).foreach { t =>
-          val tmp = s"$base/tmp-$t"
-          all.filter(col("__u") >= t * batchRows &&
-              col("__u") < (t + 1) * batchRows)
-            .select(col("doc_id"), col("source"), col("text"))
-            .withColumn("embedding", emb)
-            .coalesce(1).write.parquet(tmp)
-          val f = new java.io.File(tmp).listFiles()
-            .filter(_.getName.endsWith(".parquet")).head
-          val dst = new java.io.File(s"$base/docs/d$t.parquet")
-          dst.getParentFile.mkdirs()
-          Files.move(f.toPath, dst.toPath)
-          dst.setLastModified(1700000000000L + t * 60000L)
-          ()
-        }
-        val raw = spark.readStream
-          .schema(spark.read.parquet(s"$base/docs").schema)
-          .option("maxFilesPerTrigger", "1")
-          .option("latestFirst", "false")
-          .parquet(s"$base/docs")
+        stageDrops(all, s"$base/docs", triggers, batchRows)
+        val raw = StagedDrops.open(spark, s"$base/docs")
         // the stateful leg: event time advances one hour per trigger
         // (derived from doc_id, so it is deterministic and id-ordered
         // with the files); the 2 h watermark holds ~3 triggers of
@@ -494,8 +477,6 @@ object RefreshScale {
     // digests must reproduce bit-for-bit — deterministic Portable
     // hashes make even the near tier's probabilistic recall identical
     // across runs.
-    val scaleRuns =
-      sys.env.get("SPARK_GRAFT_SCALE_RUNS").map(_.toInt).getOrElse(2)
     val per = (1 to scaleRuns).map { i =>
       val r0 = run(spark, prior, triggers, batchRows)
       check(r0, requireFlatness = false)

@@ -128,17 +128,15 @@ object RefreshVariants {
       // deterministic contracts gate every raw pass; routes must be
       // identical across passes (the probe keys on the data
       // distribution, never the host)
-      val scaleRunsSkew =
-        sys.env.get("SPARK_GRAFT_SCALE_RUNS").map(_.toInt).getOrElse(2)
       def leg(label: String, hotPct: Int,
               packSkew: Option[Boolean]): RefreshScale.Result = {
-        val per = (1 to scaleRunsSkew).map { i =>
+        val per = (1 to scaleRuns).map { i =>
           val r = RefreshScale.run(spark, prior, triggers, batchRows,
             hotPct = hotPct, packSkew = packSkew)
           // flatness is RECORDED, not gated — the slope artifact
           // already pins it
           RefreshScale.check(r, requireFlatness = false)
-          println(f"[refreshvariants] $label pass $i/$scaleRunsSkew " +
+          println(f"[refreshvariants] $label pass $i/$scaleRuns " +
             f"drain=${r.drainWallS}%.1fs " +
             f"flatness=${r.flatnessRatio}%.3f accepted=${r.accepted} " +
             f"routed=${r.skewRoutedTriggers}")
@@ -176,7 +174,7 @@ object RefreshVariants {
           s"""packTokenIdsSkewRobust at the append site); each leg """ +
           s"""min-over-N passes, outputs and routes required """ +
           s"""identical across passes",""" +
-          s""""runs":$scaleRunsSkew,""" +
+          s""""runs":$scaleRuns,""" +
           s""""prior_docs":$prior,"triggers":$triggers,""" +
           s""""batch_rows":$batchRows,"hot_pct":90,""" +
           s""""routes_gated":"balanced 0, forced-window 0, auto all",""" +
@@ -211,8 +209,6 @@ object RefreshVariants {
       // stall reproduces in every pass, so it survives the min;
       // observed before min-over-N landed here, a first pass at
       // 15.6 s/trigger whose second ran at the expected ~9)
-      val scaleRuns =
-        sys.env.get("SPARK_GRAFT_SCALE_RUNS").map(_.toInt).getOrElse(2)
       def minOverN(label: String,
                    once: () => RefreshScale.Result)
           : RefreshScale.Result = {
@@ -293,8 +289,6 @@ object RefreshVariants {
       // ledger vs the one-shot chain). Two passes, outputs required
       // identical, walls element-wise min (host-steal discipline).
       val ce = 1
-      val scaleRuns =
-        sys.env.get("SPARK_GRAFT_SCALE_RUNS").map(_.toInt).getOrElse(2)
       val passes = (1 to scaleRuns).map { i =>
         val fl = new RefreshPipeline.FoldLog
         val r = RefreshScale.run(spark, prior, triggers, batchRows,
@@ -373,8 +367,6 @@ object RefreshVariants {
       // bar the trigger gate also uses); no trigger stalls
       // (max/median <= 2x).
       val horizon = triggers * 3
-      val scaleRuns =
-        sys.env.get("SPARK_GRAFT_SCALE_RUNS").map(_.toInt).getOrElse(2)
       def tier1Walls(fl: RefreshPipeline.FoldLog): Seq[Double] = fl
         .events.filter(e => e.kind.startsWith("finished") && e.tier == 1)
         .map(_.wallS)
@@ -466,8 +458,6 @@ object RefreshVariants {
       // triggers — the serialized owed-queue must defer-then-drain
       // exactly as it does for generation folds, with the same gates.
       val ce = 1
-      val scaleRuns =
-        sys.env.get("SPARK_GRAFT_SCALE_RUNS").map(_.toInt).getOrElse(2)
       val passes = (1 to scaleRuns).map { i =>
         val fl = new RefreshPipeline.FoldLog
         val r = RefreshScale.run(spark, prior, triggers, batchRows,

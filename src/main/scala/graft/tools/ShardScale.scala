@@ -90,8 +90,6 @@ object ShardScale {
     // min-over-N, applied per metric: the whole per-scale block runs N
     // times (contracts REQUIRED every time), the artifact records each
     // metric's minimum
-    val scaleRuns =
-      sys.env.get("SPARK_GRAFT_SCALE_RUNS").map(_.toInt).getOrElse(2)
     val spark = SparkSession.builder()
       .master("local[32]")
       .config("spark.driver.memory", "48g")

@@ -257,8 +257,6 @@ object SkewScale {
     val steps = args.lift(2).map(_.toInt).getOrElse(400)
     val stepRows = args.lift(3).map(_.toInt).getOrElse(5000)
     val classSize = math.max(1000L, math.min(100000L, n / 10))
-    val scaleRuns =
-      sys.env.get("SPARK_GRAFT_SCALE_RUNS").map(_.toInt).getOrElse(2)
     // block filter (default all): re-measure one block on a quiet host
     // without paying for the other two; the artifact stitcher merges
     val blocks = sys.env.get("GRAFT_SKEW_BLOCKS")

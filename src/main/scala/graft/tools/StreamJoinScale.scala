@@ -370,8 +370,6 @@ object StreamJoinScale {
     // different batch boundaries run-to-run), so each run's series is
     // bound-checked by `check` and the recorded series is the
     // fastest run's.
-    val scaleRuns =
-      sys.env.get("SPARK_GRAFT_SCALE_RUNS").map(_.toInt).getOrElse(2)
     val spark = SparkSession.builder()
       .master("local[32]")
       .config("spark.driver.memory", "48g")
