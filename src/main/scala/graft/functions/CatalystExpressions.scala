@@ -1199,20 +1199,11 @@ object PqAdcCodec {
     * does not belong to this codebook. */
   def dist(vec: ArrayData, codes: ArrayData,
            centroids: Array[Array[Array[Long]]]): Long = {
-    val m = centroids.length
-    if (codes.numElements() != m) throw new IllegalStateException(
-      s"pq_adc_dist: ${codes.numElements()} codes for m=$m subspaces")
-    val subDim = centroids(0)(0).length
-    if (vec.numElements() != m * subDim) throw new IllegalStateException(
-      s"pq_adc_dist: vector dim ${vec.numElements()} != ${m * subDim}")
+    val subDim = checkShape(vec.numElements(), codes, centroids)
     var acc = 0L
     var s = 0
-    while (s < m) {
-      val code = codes.getInt(s)
-      if (code < 0 || code >= centroids(s).length)
-        throw new IllegalStateException(
-          s"pq_adc_dist: code $code out of range for subspace $s")
-      val cw = centroids(s)(code)
+    while (s < centroids.length) {
+      val cw = codeword(codes, s, centroids)
       var d = 0
       val off = s * subDim
       while (d < subDim) {
@@ -1223,6 +1214,49 @@ object PqAdcCodec {
       s += 1
     }
     acc
+  }
+
+  /** [[dist]] over a driver-built unit vector: the same checks and the
+    * same wrapping long arithmetic, for the driver-planned probe path. */
+  def dist(vec: Array[Long], codes: ArrayData,
+           centroids: Array[Array[Array[Long]]]): Long = {
+    val subDim = checkShape(vec.length, codes, centroids)
+    var acc = 0L
+    var s = 0
+    while (s < centroids.length) {
+      val cw = codeword(codes, s, centroids)
+      var d = 0
+      val off = s * subDim
+      while (d < subDim) {
+        val diff = vec(off + d) - cw(d)
+        acc += diff * diff
+        d += 1
+      }
+      s += 1
+    }
+    acc
+  }
+
+  /** The codebook's subspace width, after checking the code count and
+    * the vector dimension. */
+  private def checkShape(dim: Int, codes: ArrayData,
+                         centroids: Array[Array[Array[Long]]]): Int = {
+    val m = centroids.length
+    if (codes.numElements() != m) throw new IllegalStateException(
+      s"pq_adc_dist: ${codes.numElements()} codes for m=$m subspaces")
+    val subDim = centroids(0)(0).length
+    if (dim != m * subDim) throw new IllegalStateException(
+      s"pq_adc_dist: vector dim $dim != ${m * subDim}")
+    subDim
+  }
+
+  private def codeword(codes: ArrayData, s: Int,
+                       centroids: Array[Array[Array[Long]]]): Array[Long] = {
+    val code = codes.getInt(s)
+    if (code < 0 || code >= centroids(s).length)
+      throw new IllegalStateException(
+        s"pq_adc_dist: code $code out of range for subspace $s")
+    centroids(s)(code)
   }
 }
 

@@ -874,13 +874,41 @@ object Similarity {
     * residual AGAINST EACH probed list's centroid, and run the
     * integer-exact ADC of [[pqQuery]] over just those lists' codes —
     * candidates shrink by ~nProbe/nLists on top of PQ's compression.
-    * Probe-side expansion is |probes| x nLists rows (probe-bounded);
-    * the code table is reached through ONE equi join on `__list`. */
+    * Output (probe_id, neighbor_id, rank, adc_dist): per probe its `k`
+    * best rows, by ADC distance then neighbor id; the probe's own id is
+    * never its neighbor.
+    *
+    * 100 TB shape: a driver-local probe batch (a `LocalRelation`, as a
+    * client's request arrives) with probes x nLists x dim at most
+    * [[IvfPqLocal.Bound]] is planned on the DRIVER — coarse distances,
+    * list choice and residuals in the same integer arithmetic — and
+    * shipped with the codebook in one broadcast; ONE scan of the probed
+    * `__list` partitions keeps a k-heap per probe in each task, and the
+    * heaps are tree-merged on the executors, so the driver receives
+    * probes x k rows. That path runs its one Spark job when called and
+    * returns a local relation. Any other probe batch (not local, over
+    * the bound, or not servable exactly — see [[IvfPqLocal]]) takes the
+    * DataFrame path, lazy as ever: probe-side expansion of |probes| x
+    * nLists rows, one broadcast equi join on `__list` into the code
+    * table, partition-local k-heaps and one ranking window. Both paths
+    * return the same rows under the same schema. */
   def ivfPqQuery(index: IvfPqIndex, probes: DataFrame, k: Int,
                  nProbe: Int = 2, vecCol: String = "embedding",
                  idCol: String = "vec_id"): DataFrame = {
+    requireNProbe(index, nProbe)
+    IvfPqLocal.query(index, probes, k, nProbe, vecCol, idCol)
+      .getOrElse(ivfPqQueryByFrame(index, probes, k, nProbe, vecCol, idCol))
+  }
+
+  private def requireNProbe(index: IvfPqIndex, nProbe: Int): Unit =
     require(nProbe >= 1 && nProbe <= index.nLists,
       s"nProbe must be in [1, ${index.nLists}]: $nProbe")
+
+  /** [[ivfPqQuery]]'s DataFrame path, for any probe batch (nProbe
+    * checked by the caller). */
+  private[graft] def ivfPqQueryByFrame(index: IvfPqIndex, probes: DataFrame,
+                                       k: Int, nProbe: Int, vecCol: String,
+                                       idCol: String): DataFrame = {
     val cb = index.cb
     val dim = cb.m * cb.subDim
     val pxu = dimGuard(
@@ -923,20 +951,39 @@ object Similarity {
     * (measured here: 0.51 → 0.89+ at refine=10, nProbe=nLists/4).
     *
     * 100 TB shape: the shortlist is |probes| * refine * k id pairs —
-    * probe-bounded, never corpus-scale; the re-rank reaches the
-    * full-precision vectors through ONE broadcast semi-join on `idCol`
-    * (the corpus is scanned, not shuffled, and only shortlisted rows
-    * survive the scan), then partition-local k-heaps. Same ranking
-    * contract as [[bruteForceTopKL2]]: integer units, ties to the
-    * lowest neighbor id, so the whole path replays in another engine. */
+    * probe-bounded, never corpus-scale. A driver-local probe batch
+    * within [[IvfPqLocal.Bound]] takes [[ivfPqQuery]]'s driver-planned
+    * ADC scan, then ONE scan of the corpus that scores only the
+    * shortlisted ids against the probes (shipped in one broadcast),
+    * k-heaps per task tree-merged on the executors: two Spark jobs,
+    * run when called, and a local relation back. Any other batch takes
+    * the lazy DataFrame path: the shortlist reaches the full-precision
+    * vectors through ONE broadcast semi-join on `idCol` (the corpus is
+    * scanned, not shuffled, and only shortlisted rows survive the
+    * scan), then partition-local k-heaps and one ranking window. Same
+    * ranking contract as [[bruteForceTopKL2]] on both paths: integer
+    * units, ties to the lowest neighbor id, so the whole path replays
+    * in another engine. */
   def ivfPqQueryRefined(index: IvfPqIndex, corpus: DataFrame,
                         probes: DataFrame, k: Int, nProbe: Int,
                         refine: Int = 10,
                         vecCol: String = "embedding",
                         idCol: String = "vec_id"): DataFrame = {
     require(refine >= 1, s"refine must be >= 1: $refine")
+    requireNProbe(index, nProbe)
+    IvfPqLocal.queryRefined(index, corpus, probes, k, nProbe, refine,
+        vecCol, idCol)
+      .getOrElse(ivfPqQueryRefinedByFrame(index, corpus, probes, k, nProbe,
+        refine, vecCol, idCol))
+  }
+
+  /** [[ivfPqQueryRefined]]'s DataFrame path, for any probe batch. */
+  private[graft] def ivfPqQueryRefinedByFrame(index: IvfPqIndex,
+      corpus: DataFrame, probes: DataFrame, k: Int, nProbe: Int,
+      refine: Int, vecCol: String, idCol: String): DataFrame = {
     val scale = index.cb.unitScale
-    val cand = ivfPqQuery(index, probes, refine * k, nProbe, vecCol, idCol)
+    val cand = ivfPqQueryByFrame(index, probes, refine * k, nProbe, vecCol,
+        idCol)
       .select(col("probe_id"), col("neighbor_id"))
     val c = quantizedUnits(corpus, vecCol, idCol, scale)
       .select(col("__id").as("neighbor_id"), col("__xu").as("__cu"))

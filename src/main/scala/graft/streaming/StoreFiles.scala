@@ -201,14 +201,26 @@ private[graft] object StoreFiles {
     * any rewrite or in-place append changes it. Empty when nothing can
     * be listed (a non-local path such as hdfs:// or s3a://, or an
     * unreadable dir): callers treat that as uncacheable. */
-  def fingerprint(dir: java.io.File): String = {
-    def walk(f: java.io.File, rel: String): Seq[String] =
-      Option(f.listFiles()).fold(Seq.empty[String])(_.toSeq.flatMap { c =>
-        val r = s"$rel/${c.getName}"
-        if (c.isDirectory) walk(c, r)
-        else Seq(s"$r:${c.length}:${c.lastModified}")
-      })
-    walk(dir, dir.getName).sorted.mkString("\n")
+  def fingerprint(dir: java.io.File): String =
+    fingerprintOf(dir, listing(dir))
+
+  /** [[fingerprint]] of a [[listing]] of `dir` already made. */
+  def fingerprintOf(dir: java.io.File,
+                    files: Seq[(String, Long, Long)]): String =
+    files.map { case (rel, len, mtime) => s"${dir.getName}/$rel:$len:$mtime" }
+      .sorted.mkString("\n")
+
+  /** Every file under `dir`, recursively, as (path relative to `dir`,
+    * length, mtime); empty when nothing can be listed. */
+  def listing(dir: java.io.File): Seq[(String, Long, Long)] = {
+    def walk(f: java.io.File, rel: String): Seq[(String, Long, Long)] =
+      Option(f.listFiles()).fold(Seq.empty[(String, Long, Long)])(
+        _.toSeq.flatMap { c =>
+          val r = if (rel.isEmpty) c.getName else s"$rel/${c.getName}"
+          if (c.isDirectory) walk(c, r)
+          else Seq((r, c.length, c.lastModified))
+        })
+    walk(dir, "")
   }
 
   /** The canonical form of `path`, or `path` itself when it cannot be

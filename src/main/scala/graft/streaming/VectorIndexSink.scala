@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, coalesce, col, count, lit, max, sum, when}
 import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.graftglue.GraftGlue
 import graft.operators.Similarity
 
 /** Streaming vector ingest into a SAVED IVF-PQ index — q158/q159's
@@ -304,9 +305,13 @@ object VectorIndexSink {
 
   // ---- the serving path's arm cache ----
   //
-  // Opening an arm (`spark.read.parquet`) lists its `__list=` dirs and
-  // runs a parquet schema pass: Spark jobs and driver time paid before
-  // a probe is scored, and as much as scoring itself on a small index.
+  // Opening an arm with `spark.read.parquet` lists its files (a Spark
+  // job once it has more than 32 `__list=` dirs) and runs a parquet
+  // schema job. The base, tombstone and tier-run arms still open that
+  // way; an append delta has the base's layout and opens from the base
+  // relation's schema and the fingerprint walk's own file listing
+  // (`GraftGlue.openLike`), with no job at all. Either way the open is
+  // driver time paid before a probe is scored.
   // [[read]] keeps, per index dir, the resolved relation of every arm
   // it served, keyed by the arm's path and [[StoreFiles.fingerprint]].
   // Published arms are immutable (one atomic rename), so they hit until
@@ -339,10 +344,12 @@ object VectorIndexSink {
     * side) is opened once per session and reused while its file
     * fingerprint (name + length + mtime of every file under it) is
     * unchanged, so a repeat read of an unchanged index launches no
-    * Spark job and a read after an append opens only the new delta.
-    * Each read keeps the arms still on disk, whether or not it served
-    * them (an `asOf` read does not evict newer arms): arms retired by a
-    * fold, [[compact]] or [[retire]] drop out, and memory stays
+    * Spark job and a read after an append opens only the new delta,
+    * again with no job: a new delta opens with the base arm's schema
+    * and its own fingerprint listing. Each read keeps the arms still
+    * on disk, whether or not it served them (an `asOf` read does not
+    * evict newer arms): arms retired by a fold, [[compact]] or
+    * [[retire]] drop out, and memory stays
     * O(live arms) per index dir. Dirs that no longer exist and
     * sessions that have stopped are dropped on every read. The
     * retired, tiered-floor and torn-append checks run on every call. */
@@ -358,11 +365,14 @@ object VectorIndexSink {
     // fingerprint BEFORE opening: a change racing the open leaves a
     // stale fingerprint that misses next time, never a stale relation
     // under a current fingerprint
-    def open(path: String): DataFrame = {
-      val fp = StoreFiles.fingerprint(new java.io.File(path))
+    def open(path: String, like: Option[DataFrame] = None): DataFrame = {
+      val dir = new java.io.File(path)
+      val files = StoreFiles.listing(dir)
+      val fp = StoreFiles.fingerprintOf(dir, files)
       if (fp.isEmpty) spark.read.parquet(path)
       else {
         val df = known.get(path).filter(_._1 == fp).map(_._2)
+          .orElse(like.flatMap(GraftGlue.openLike(_, path, files)))
           .getOrElse(spark.read.parquet(path))
         served += path -> (fp, df)
         df
@@ -387,6 +397,9 @@ object VectorIndexSink {
     def upTo[A](ds: Seq[(Long, A)]): Seq[(Long, A)] =
       asOf.fold(ds)(v => ds.filter(_._1 <= v))
         .filter { case (id, _) => live(id) }
+    // an append delta has the base's layout: it opens with the base's
+    // schema and its fingerprint listing, so no listing or schema job
+    val baseArm = open(s"$indexDir/encoded")
     // tag every arm with its append batch; the base predates all
     // batches, so any tombstone masks it; run rows carry their batch
     // tags (and run tombstones their batch) physically
@@ -394,10 +407,9 @@ object VectorIndexSink {
       .filter(r => new java.io.File(r.run.get, "rows").isDirectory)
       .map(r => open(s"${r.run.get.getAbsolutePath}/rows")) ++
       upTo(deltaDirs(indexDir)).map { case (b, f) =>
-        open(f.getAbsolutePath).withColumn("__b", lit(b))
+        open(f.getAbsolutePath, Some(baseArm)).withColumn("__b", lit(b))
       })
-      .foldLeft(open(s"$indexDir/encoded").withColumn("__b", lit(-1L)))(
-        _ unionByName _)
+      .foldLeft(baseArm.withColumn("__b", lit(-1L)))(_ unionByName _)
     val dead = (runs
       .filter(r => new java.io.File(r.run.get, "tombs").isDirectory)
       .map(r => open(s"${r.run.get.getAbsolutePath}/tombs")

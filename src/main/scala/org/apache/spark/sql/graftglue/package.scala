@@ -84,6 +84,53 @@ object GraftGlue {
   def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty()
 
+  /** A file-source relation laid out like `like` (an opened
+    * `spark.read.parquet` frame: same format, options, data and
+    * partition schemas) over the directory `root`, whose leaf files the
+    * caller has already listed as (path relative to `root`, length,
+    * mtime). The file index is fed that listing and the schema is
+    * `like`'s, so opening it runs no listing job and no schema job,
+    * whatever the number of partition dirs. Hidden and `_`-prefixed
+    * paths are skipped as Spark's own listing skips them. None when
+    * `like` is not a plain file-source relation. */
+  def openLike(like: org.apache.spark.sql.DataFrame, root: String,
+               files: Seq[(String, Long, Long)])
+      : Option[org.apache.spark.sql.DataFrame] = {
+    import org.apache.hadoop.fs.{FileStatus, Path}
+    import org.apache.spark.sql.execution.datasources.{FileStatusCache,
+      HadoopFsRelation, InMemoryFileIndex, LogicalRelation}
+    val relation = like.queryExecution.analyzed match {
+      case l: LogicalRelation => Some(l.relation)
+      case _ => None
+    }
+    relation.collect { case h: HadoopFsRelation =>
+      val spark = like.sparkSession
+        .asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      val conf = spark.sessionState.newHadoopConfWithOptions(h.options)
+      val raw = new Path(root)
+      val fs = raw.getFileSystem(conf)
+      val rootPath = fs.makeQualified(raw)
+      val blockSize = fs.getDefaultBlockSize(rootPath)
+      val leaves = files
+        .filterNot(f => f._1.split('/').exists(
+          org.apache.spark.util.HadoopFSUtils.shouldFilterOutPathName))
+        .map { case (rel, len, mtime) =>
+          new FileStatus(len, false, 1, blockSize, mtime,
+            new Path(rootPath, rel))
+        }.toArray
+      val listed = new FileStatusCache {
+        override def getLeafFiles(p: Path): Option[Array[FileStatus]] =
+          if (p == rootPath) Some(leaves) else None
+        def putLeafFiles(p: Path, f: Array[FileStatus]): Unit = ()
+        def invalidateAll(): Unit = ()
+      }
+      val index = new InMemoryFileIndex(spark, Seq(rootPath), h.options,
+        Some(h.schema), listed)
+      org.apache.spark.sql.classic.Dataset.ofRows(spark,
+        LogicalRelation(h.copy(location = index)(spark)))
+    }
+  }
+
   def releaseRdd(rdd: org.apache.spark.rdd.RDD[_]): Unit = {
     // Spark WARNs ("locally checkpointed ... cannot be recomputed after
     // unpersisting") on every such unpersist via the concrete RDD

@@ -312,6 +312,42 @@ class VectorIndexSinkSpec extends SparkSpec {
     } finally rmTree(base)
   }
 
+  test("a new delta with more __list dirs than Spark's parallel-listing " +
+      "threshold opens with no job and serves its rows; a local probe " +
+      "batch then runs 1 ADC job, or 2 jobs refined") {
+    val base = java.nio.file.Files.createTempDirectory("graft_vdelta_")
+    try {
+      val ix = base.toString
+      val all = (0L until 300L).map(i =>
+          (i, Array.tabulate(8)(d => math.sin((i * 3 + d).toDouble).toFloat)))
+        .toDF("vec_id", "embedding")
+      def slice(lo: Long, hi: Long) =
+        all.filter(col("vec_id") >= lo && col("vec_id") < hi)
+      Similarity.ivfPqSave(Similarity.ivfPqBuild(slice(0L, 100L),
+        nLists = 40, m = 2, kCodes = 4, iterations = 2), ix)
+      VectorIndexSink.appendBatch(spark, ix, 0L, slice(100L, 200L))
+      VectorIndexSink.read(spark, ix)
+      VectorIndexSink.appendBatch(spark, ix, 1L, slice(200L, 300L))
+      val lists = new java.io.File(s"$ix/appends/b1").listFiles()
+        .count(_.getName.startsWith("__list="))
+      assert(lists > 32, s"delta b1 has only $lists list dirs")
+      val (idx, readJobs) = jobsOf(VectorIndexSink.read(spark, ix))
+      assert(readJobs == 0, s"read after append ran $readJobs jobs")
+      val opened = Seq(s"$ix/encoded", s"$ix/appends/b0", s"$ix/appends/b1")
+        .map(spark.read.parquet(_)).reduce(_ unionByName _)
+      assert(encSet(idx.encoded) == encSet(opened))
+      assert(encSet(idx.encoded.filter(col("__list") === 7)) ==
+        encSet(opened.filter(col("__list") === 7)))
+      val probes = all.filter(col("vec_id") % 37 === 0)
+      val (_, adcJobs) = jobsOf(
+        Similarity.ivfPqQuery(idx, probes, 5, 10).collect())
+      assert(adcJobs == 1, s"ivfPqQuery ran $adcJobs jobs")
+      val (_, refinedJobs) = jobsOf(
+        Similarity.ivfPqQueryRefined(idx, all, probes, 5, 10, 4).collect())
+      assert(refinedJobs == 2, s"ivfPqQueryRefined ran $refinedJobs jobs")
+    } finally rmTree(base)
+  }
+
   test("read's arm cache: a repeat read launches no Spark job; new " +
       "deltas, in-place base appends and tombstones are all served") {
     val base = java.nio.file.Files.createTempDirectory("graft_varms_")
@@ -331,11 +367,10 @@ class VectorIndexSinkSpec extends SparkSpec {
       VectorIndexSink.appendBatch(spark, ix, 1L, range(35L, 38L))
       // an asOf read below the new delta serves the old view...
       val asOf0 = idsAsOf(0L)
-      // ...and the next full read opens only the new delta: the same
-      // jobs as opening that one arm on its own
+      // ...and the next full read opens only the new delta, from the
+      // base's schema and its own listing: no job at all
       val (withB1, b1Jobs) = jobsOf(VectorIndexSink.read(spark, ix))
-      val (_, openJobs) = jobsOf(spark.read.parquet(s"$ix/appends/b1"))
-      assert(b1Jobs == openJobs, s"read after append ran $b1Jobs jobs")
+      assert(b1Jobs == 0, s"read after append ran $b1Jobs jobs")
       assert(ids(withB1) == (0L until 38L).toSet)
       // an asOf read keeps the newer arms it does not serve: the full
       // read right after it opens nothing
