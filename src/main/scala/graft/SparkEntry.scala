@@ -110,6 +110,13 @@ object SparkEntry {
       .withColumn("ts", tsColumn(sch("ts").dataType, toSecond = true))
   }
 
+  /** A few-row probe batch collected into a driver-local relation, so
+    * `ivfPqQueryRefined` plans it on the driver (`IvfPqLocal`, same
+    * rows) instead of taking the DataFrame path a table filter takes. */
+  private def localProbes(probes: DataFrame): DataFrame =
+    probes.sparkSession.createDataFrame(
+      java.util.Arrays.asList(probes.collect(): _*), probes.schema)
+
   /** Corpus size for the synthetic ANN scale rows (q148/q153), matched
     * EXPLICITLY against the fixture dir's scale factor: bench SF (0.1)
     * gets the 100k scale-evidence corpus, the correctness SFs get the
@@ -1284,10 +1291,10 @@ object SparkEntry {
             graft.streaming.RefreshPipeline.processBatch(
               cuts.drop(c.newDocs, "doc_id", k)
                 .withColumn("embedding", StagedDrops.emb),
-              k.toLong, caches, s"$base/store", s"$base/ledger",
+              k.toLong, caches, graft.streaming.RefreshPipeline.Stores
+                .Dirs(s"$base/store", Some(s"$base/ix")), s"$base/ledger",
               budget = 2048, shardCol = "source", idCol = "doc_id",
-              threshold = 0.8, minMatches = 2,
-              indexDir = Some(s"$base/ix"), vecCol = "embedding")
+              threshold = 0.8, minMatches = 2, vecCol = "embedding")
           }
         } finally caches.release()
         Bench.recordComponent("q171_three_drops",
@@ -1516,11 +1523,10 @@ object SparkEntry {
             graft.streaming.RefreshPipeline.processBatch(
               cuts.drop(c.newDocs, "doc_id", k)
                 .withColumn("embedding", StagedDrops.emb),
-              k.toLong, caches, storeDir = "", s"$base/ledger",
+              k.toLong, caches, graft.streaming.RefreshPipeline.Stores
+                .Roots(sRoot, Some(iRoot)), s"$base/ledger",
               budget = 2048, shardCol = "source", idCol = "doc_id",
-              threshold = 0.8, minMatches = 2, indexDir = None,
-              vecCol = "embedding", shardRoot = Some(sRoot),
-              indexRoot = Some(iRoot))
+              threshold = 0.8, minMatches = 2, vecCol = "embedding")
           }
         } finally caches.release()
         Bench.recordComponent("q176_three_drops",
@@ -1622,7 +1628,7 @@ object SparkEntry {
       val k = 10
       val idx = Similarity.ivfPqBuild(emb, nLists = nLists, m = 8,
         kCodes = 256, iterations = 2)
-      val probes = emb.filter(col("vec_id") < 16)
+      val probes = localProbes(emb.filter(col("vec_id") < 16))
       val refined = Similarity.ivfPqQueryRefined(idx, emb, probes, k,
         nProbe = nProbe, refine = 10)
       val rec = Similarity.recallAtK(refined,
@@ -1666,7 +1672,7 @@ object SparkEntry {
         require(nEnc == n, s"encoded $nEnc of $n vectors")
         Bench.recordComponent(s"q148_build_n$n",
           (System.nanoTime() - tBuild) / 1e9)
-        val probes = emb.filter(col("vec_id") % (n / 16) === 0)
+        val probes = localProbes(emb.filter(col("vec_id") % (n / 16) === 0))
         val tServe = System.nanoTime()
         val refined = Similarity.ivfPqQueryRefined(idx, emb, probes, k,
             nProbe = nProbe, refine = 10)
@@ -1720,7 +1726,7 @@ object SparkEntry {
         require(nEnc == n, s"encoded $nEnc of $n vectors")
         Bench.recordComponent(s"q153_sampled_build_n$n",
           (System.nanoTime() - tBuild) / 1e9)
-        val probes = emb.filter(col("vec_id") % (n / 16) === 0)
+        val probes = localProbes(emb.filter(col("vec_id") % (n / 16) === 0))
         val refined = Similarity.ivfPqQueryRefined(idx, emb, probes, k,
             nProbe = nProbe, refine = 30)
           .localCheckpoint(true)
@@ -1763,7 +1769,7 @@ object SparkEntry {
         val tServe = System.nanoTime()
         val out = (0 until 4).map { b =>
             Similarity.ivfPqQueryRefined(loaded, emb,
-              emb.filter(col("vec_id") % 100 === b), k = 10,
+              localProbes(emb.filter(col("vec_id") % 100 === b)), k = 10,
               nProbe = nProbe, refine = 10)
           }.reduce(_ unionByName _)
           .groupBy(col("rank"))
@@ -1810,7 +1816,7 @@ object SparkEntry {
         val tServe = System.nanoTime()
         val out = (0 until 4).map { b =>
             Similarity.ivfPqQueryRefined(loaded, emb,
-              emb.filter(col("vec_id") % 100 === b), k = 10,
+              localProbes(emb.filter(col("vec_id") % 100 === b)), k = 10,
               nProbe = nProbe, refine = 10)
           }.reduce(_ unionByName _)
           .groupBy(col("rank"))

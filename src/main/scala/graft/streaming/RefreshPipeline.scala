@@ -109,7 +109,7 @@ object RefreshPipeline {
           // pre-bloom path's lit(false): nothing is a member. Spark's
           // bloomFilter aggregate NPEs on zero rows, so hand back an
           // empty filter of the same shape instead.
-          countRebuild()
+          rebuildCount += 1
           val nonNull = refFps.filter(col("__pfp").isNotNull)
           val b =
             if (nonNull.isEmpty) BloomFilter.create(capacity, fpp)
@@ -143,37 +143,11 @@ object RefreshPipeline {
     /** How many times [[bloomFor]] took the REBUILD branch — the
       * O(accepted history) aggregation the accumulator exists to
       * amortize away. A healthy unbroken run rebuilds exactly once
-      * (the first trigger); [[LedgerLog]] surfaces the count so a
+      * (the first trigger); each [[DrainLog]] row carries the count so a
       * long-horizon artifact can GATE it instead of inferring the
       * amortization from wall time. */
     def rebuilds: Long = rebuildCount
     private var rebuildCount = 0L
-    private[RefreshPipeline] def countRebuild(): Unit =
-      rebuildCount += 1
-  }
-
-  /** Run-scoped telemetry of the exact tier's LEDGER cost per
-    * non-empty trigger — the term that grows with accepted history
-    * and that the bloom accumulator + prefix-bitmap sidecar exist to
-    * floor. Records, per trigger: how many earlier ledger batches
-    * existed, how many leaf paths the confirm join actually read
-    * (after any prefix pruning; 0 when the bloom routed no candidate
-    * into the confirm), the total BYTES of those paths (the raw
-    * O(history) input the flat-wall claim must beat), and the
-    * cumulative bloom rebuild count (must stay at 1 over an unbroken
-    * drain). Driver-held, O(triggers) rows, never persisted. */
-  final case class LedgerRow(batchId: Long, earlierBatches: Int,
-                             confirmPaths: Int, confirmBytes: Long,
-                             bloomRebuilds: Long)
-
-  final class LedgerLog {
-    private val buf =
-      new java.util.concurrent.ConcurrentLinkedQueue[LedgerRow]()
-    private[graft] def record(r: LedgerRow): Unit = { buf.add(r); () }
-    def rows: Seq[LedgerRow] = {
-      import scala.jdk.CollectionConverters._
-      buf.asScala.toSeq.sortBy(_.batchId)
-    }
   }
 
   /** The auto-probe's crossover rule for routing a trigger's shard
@@ -191,57 +165,48 @@ object RefreshPipeline {
   /** See [[autoPackSkew]]. */
   private[graft] val AutoPackSkewFloor = 10000L
 
-  /** Run-scoped telemetry of the pack-route decision ([[autoPackSkew]])
-    * per non-empty trigger: which triggers the auto-probe (or an
-    * explicit `packSkew`) routed through the skew-robust pack. Exists
-    * so a drain artifact can assert "the probe chose skew-robust on
-    * exactly the hot triggers" instead of inferring it from wall time;
-    * driver-held, O(triggers) booleans, never persisted. */
-  final class RouteLog {
-    private val m =
-      new java.util.concurrent.ConcurrentHashMap[Long, Boolean]()
-    private[graft] def record(batchId: Long, skewRobust: Boolean): Unit = {
-      m.put(batchId, skewRobust); ()
-    }
-    /** batchId -> took-the-skew-robust-pack, non-empty triggers only. */
-    def routes: Map[Long, Boolean] = {
-      import scala.jdk.CollectionConverters._
-      m.asScala.toMap
-    }
-  }
-
-  /** Run-scoped telemetry of the out-of-band compaction lifecycle —
-    * what [[runManaged]]'s serialized fold queue actually did, so an
-    * artifact can gate "a fold overran its compaction window and the
-    * owed queue deferred-then-drained" on observed events instead of
-    * inferring it from wall time. Event kinds: `point` (a scheduled
-    * compaction point, with the in-flight + owed depth at that
-    * instant — depth > 0 IS an overrun: the previous point's work is
-    * still unfinished), `held-place` (a root already queued at its
-    * next point — the defer-never-skip rule firing), `begun` /
-    * `noop` (a queued cycle started its fold / had no debt), and
-    * `finished` / `finished-forced` (completed at a trigger boundary /
-    * in the end-of-drain forced loop, with the begin->finish wall).
-    * Driver-held, O(cycles) events, never persisted. */
-  final class FoldLog {
-    /** `tier` is -1 for generation folds, the resulting run's tier for
-      * size-tiered folds — what lets an artifact gate "tier-1 fold
-      * walls stay flat as the store grows" per tier instead of mixing
-      * a rare top-tier fold into the common case's distribution. */
-    final case class Event(kind: String, root: String, batchId: Long,
-                           depth: Int, wallS: Double, tier: Int)
-    private val buf =
+  /** The refresh chain's one run log, driver-held and never persisted:
+    * one [[DrainLog.Row]] per non-empty trigger, the fold events of
+    * [[runManaged]], and trigger 1's formatted tiers plan — so a drain
+    * artifact gates on what a trigger observably did, not on wall time.
+    * Filling it adds no Spark job; with no log passed a trigger adds no
+    * listener, reads no clock and renders no plan.
+    *
+    * The fold events record what [[runManaged]]'s serialized fold
+    * queue actually did, so an artifact can gate "a fold overran its
+    * compaction window and the owed queue deferred-then-drained" on
+    * observed events. Event kinds: `point` (a scheduled compaction
+    * point, with the in-flight + owed depth at that instant — depth > 0
+    * IS an overrun: the previous point's work is still unfinished),
+    * `held-place` (a root already queued at its next point — the
+    * defer-never-skip rule firing), `begun` / `noop` (a queued cycle
+    * started its fold / had no debt), and `finished` /
+    * `finished-forced` (completed at a trigger boundary / in the
+    * end-of-drain forced loop, with the begin->finish wall). */
+  final class DrainLog {
+    import DrainLog.{Event, Row}
+    import scala.jdk.CollectionConverters._
+    private val rowBuf = new java.util.concurrent.ConcurrentLinkedQueue[Row]()
+    private val eventBuf =
       new java.util.concurrent.ConcurrentLinkedQueue[Event]()
-    private[graft] def record(kind: String, root: String, batchId: Long,
-                              depth: Int = 0, wallS: Double = -1.0,
-                              tier: Int = -1)
-        : Unit = {
-      buf.add(Event(kind, root, batchId, depth, wallS, tier)); ()
+    @volatile private var plan: Option[String] = None
+    private[RefreshPipeline] def recordRow(r: Row): Unit = {
+      rowBuf.add(r); ()
     }
-    def events: Seq[Event] = {
-      import scala.jdk.CollectionConverters._
-      buf.asScala.toSeq
+    private[RefreshPipeline] def recordPlan(p: String): Unit = plan = Some(p)
+    private[RefreshPipeline] def record(kind: String, root: String,
+        batchId: Long, depth: Int = 0, wallS: Double = -1.0,
+        tier: Int = -1): Unit = {
+      eventBuf.add(Event(kind, root, batchId, depth, wallS, tier)); ()
     }
+    /** One row per non-empty trigger, by batch id. */
+    def rows: Seq[Row] = rowBuf.asScala.toSeq.sortBy(_.batchId)
+    /** Trigger 1's executed tiers plan (the exact-tier filter, the
+      * fused near ∪ contam anti join, the branch shapes), formatted —
+      * one representative micro-batch, so per-trigger plan claims are
+      * artifact-verifiable instead of code-readable. */
+    def tiersPlan: Option[String] = plan
+    def events: Seq[Event] = eventBuf.asScala.toSeq
     /** Compaction points that arrived while earlier cycles were still
       * in flight or owed — each one is an observed fold overrun. */
     def overruns: Int = events.count(e => e.kind == "point" && e.depth > 0)
@@ -255,59 +220,146 @@ object RefreshPipeline {
     def drained: Boolean = begun == finished
   }
 
-  /** Debug-only (GRAFT_RP_DEBUG) job/task accounting: counts Spark jobs,
-    * stages and tasks plus summed executor task time, so a per-trigger
-    * debug line can split wall time into "cluster work" (task time /
-    * cores) and "driver overhead" (planning, scheduling, commit). One
-    * listener per JVM, installed lazily on first snapshot; never active
-    * outside debug runs. */
-  private object TriggerStats {
-    private val jobs = new java.util.concurrent.atomic.AtomicLong
-    private val stages = new java.util.concurrent.atomic.AtomicLong
-    private val tasks = new java.util.concurrent.atomic.AtomicLong
-    private val taskMs = new java.util.concurrent.atomic.AtomicLong
-    private val byDesc =
-      new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-    @volatile private var installed = false
-    def descCounts: Map[String, Long] = {
-      import scala.jdk.CollectionConverters._
-      byDesc.asScala.map { case (k, v) => (k, v.longValue) }.toMap
-    }
-    def resetDesc(): Unit = byDesc.clear()
-    private def install(sp: SparkSession): Unit = synchronized {
-      if (!installed) {
-        sp.sparkContext.addSparkListener(
-          new org.apache.spark.scheduler.SparkListener {
-            override def onJobStart(
-                j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-              jobs.incrementAndGet()
-              val d = Option(j.properties)
-                .flatMap(p => Option(p.getProperty("spark.job.description")))
-                .getOrElse("(none)")
-              byDesc.merge(d, 1L,
-                (a, b) => java.lang.Long.valueOf(a + b))
-              ()
-            }
-            override def onStageCompleted(
-                s: org.apache.spark.scheduler.SparkListenerStageCompleted)
-                : Unit = {
-              stages.incrementAndGet()
-              tasks.addAndGet(s.stageInfo.numTasks.toLong); ()
-            }
-            override def onTaskEnd(
-                t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-              if (t.taskMetrics != null)
-                taskMs.addAndGet(t.taskMetrics.executorRunTime)
-              ()
-            }
-          })
-        installed = true
+  object DrainLog {
+    /** The wall of one labelled stage of a trigger and the jobs
+      * launched inside it. */
+    final case class Stage(wallS: Double, jobs: Int)
+
+    /** One non-empty trigger: its row count; each labelled stage that
+      * ran (`exactconfirm`, `exactledger`, `tiers`, `skewprobe`,
+      * `shard`, `index`, `ledger`, `bloomadv`); the jobs of the
+      * trigger's own job group (a fold's group is not counted) with
+      * their tasks and executor seconds, which split the wall into
+      * cluster work (task seconds / cores) and driver overhead
+      * (planning, scheduling, commit); and the pack route, so an
+      * artifact can assert the probe chose skew-robust on exactly the
+      * hot triggers.
+      *
+      * The exact tier's LEDGER cost — the term that grows with
+      * accepted history and that the bloom accumulator + prefix-bitmap
+      * sidecar exist to floor: how many earlier ledger batches
+      * existed, how many leaf paths the confirm read (after any prefix
+      * pruning; 0 when the bloom routed no candidate into the
+      * confirm), the total BYTES of those paths (the raw O(history)
+      * input the flat-wall claim must beat), and the cumulative bloom
+      * rebuild count (must stay at 1 over an unbroken drain).
+      *
+      * `candidates` and `accepted` size the two O(batch) driver
+      * collects, so a drain shows how close each trigger comes to
+      * [[LedgerSingleFileWarnRows]]. */
+    final case class Row(batchId: Long, batchRows: Long,
+                         stages: Map[String, Stage], jobs: Int,
+                         tasks: Long, taskS: Double, skewRobust: Boolean,
+                         earlierBatches: Int, confirmPaths: Int,
+                         confirmBytes: Long, bloomRebuilds: Long,
+                         candidates: Long, accepted: Long)
+
+    /** `tier` is -1 for generation folds, the resulting run's tier for
+      * size-tiered folds — what lets an artifact gate "tier-1 fold
+      * walls stay flat as the store grows" per tier instead of mixing
+      * a rare top-tier fold into the common case's distribution. */
+    final case class Event(kind: String, root: String, batchId: Long,
+                           depth: Int, wallS: Double, tier: Int)
+  }
+
+  /** Local property naming the [[DrainLog]] stage a job runs in. */
+  private val StageKey = "graft.refresh.stage"
+
+  /** One trigger's [[DrainLog]] counts: a listener on the trigger's own
+    * context (a second context in the JVM counts too) for the jobs of
+    * the group the trigger thread held at entry — the append carrier
+    * copies it; a fold's group differs — and per [[staged]] label a
+    * wall and a job count. The label is a local property of its own,
+    * so the streaming engine's job description is never touched. */
+  private final class TriggerTrace(sc: org.apache.spark.SparkContext)
+      extends org.apache.spark.scheduler.SparkListener {
+    import java.util.concurrent.ConcurrentHashMap
+    import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
+    import org.apache.spark.scheduler.{SparkListenerJobStart,
+      SparkListenerTaskEnd}
+    private val group = sc.getLocalProperty("spark.jobGroup.id")
+    private val stageIds = ConcurrentHashMap.newKeySet[Int]()
+    private val jobs = new AtomicInteger
+    private val tasks = new AtomicLong
+    private val taskMs = new AtomicLong
+    private val stageJobs = new ConcurrentHashMap[String, AtomicInteger]()
+    private val walls = new ConcurrentHashMap[String, Double]()
+    override def onJobStart(j: SparkListenerJobStart): Unit = {
+      val p = Option(j.properties).getOrElse(new java.util.Properties)
+      if (p.getProperty("spark.jobGroup.id") == group) {
+        jobs.incrementAndGet()
+        j.stageIds.foreach(stageIds.add)
+        Option(p.getProperty(StageKey)).foreach(l => stageJobs
+          .computeIfAbsent(l, _ => new AtomicInteger).incrementAndGet())
       }
     }
-    def snapshot(sp: SparkSession): (Long, Long, Long, Long) = {
-      install(sp)
-      (jobs.get, stages.get, tasks.get, taskMs.get)
+    override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
+      if (stageIds.contains(t.stageId)) {
+        tasks.incrementAndGet()
+        Option(t.taskMetrics).foreach(m =>
+          taskMs.addAndGet(m.executorRunTime))
+      }
+    /** Time `body` and label its jobs; restores the previous label. */
+    def staged[A](label: String)(body: => A): A = {
+      val prev = sc.getLocalProperty(StageKey)
+      sc.setLocalProperty(StageKey, label)
+      val t0 = System.nanoTime()
+      try body
+      finally {
+        walls.put(label, (System.nanoTime() - t0) / 1e9)
+        sc.setLocalProperty(StageKey, prev)
+      }
     }
+    /** Stages, jobs, tasks and task seconds, once the bus has drained. */
+    def counts(): (Map[String, DrainLog.Stage], Int, Long, Double) = {
+      import scala.jdk.CollectionConverters._
+      org.apache.spark.sql.graftglue.GraftGlue.drainListenerBus(sc)
+      (walls.asScala.map { case (l, w) => l -> DrainLog.Stage(w,
+          Option(stageJobs.get(l)).fold(0)(_.get)) }.toMap,
+        jobs.get, tasks.get, taskMs.get / 1e3)
+    }
+  }
+
+  /** Where a trigger commits: plain store directories ([[ShardSink]]
+    * store, optional [[VectorIndexSink]] dir) or generation-managed
+    * [[StoreRoot]] roots. */
+  private[graft] sealed trait Stores {
+    def index: Option[String]
+
+    /** The shard append, as version `batchId + 1`. Generation-managed
+      * targets go through StoreRoot, which adds the cross-generation
+      * re-delivery skip (an append at or below the retention floor was
+      * folded by a mid-run compaction) on top of the per-generation
+      * publishOnce skip. */
+    private[RefreshPipeline] def appendShard(sp: SparkSession,
+        tokenized: DataFrame, idCol: String, budget: Int,
+        shardCol: String, batchId: Long, skewRobust: Boolean): Unit =
+      this match {
+        case Stores.Roots(r, _) => StoreRoot.appendShard(sp, r, tokenized,
+          "__ids", idCol, budget, shardCol, version = batchId + 1,
+          skewRobust = skewRobust)
+        case Stores.Dirs(d, _) => ShardSink.append(sp, tokenized, "__ids",
+          idCol, budget, shardCol, d, version = Some(batchId + 1),
+          skewRobust = skewRobust)
+      }
+
+    /** The index append, as batch `batchId`; a no-op without an index. */
+    private[RefreshPipeline] def appendIndex(sp: SparkSession,
+        batchId: Long, cleaned: DataFrame, vecCol: String,
+        idCol: String): Unit =
+      index.foreach { ix => this match {
+        case _: Stores.Roots =>
+          StoreRoot.appendVectors(sp, ix, batchId, cleaned, vecCol, idCol)
+        case _: Stores.Dirs =>
+          VectorIndexSink.appendBatch(sp, ix, batchId, cleaned, vecCol, idCol)
+      } }
+  }
+
+  private[graft] object Stores {
+    final case class Dirs(store: String, index: Option[String])
+        extends Stores
+    final case class Roots(shard: String, index: Option[String])
+        extends Stores
   }
 
   /** The trigger-invariant prior-side caches every trigger of one drain
@@ -504,20 +556,25 @@ object RefreshPipeline {
     * and confirms only its candidates, against `caches.index` and the
     * prefix-pruned earlier ledger batches; the near and decontamination
     * tiers probe `caches.postings` and `caches.refGrams`. Idempotent
-    * under re-delivery by construction. */
+    * under re-delivery by construction. With `log` given, a non-empty
+    * trigger that completes records its [[DrainLog.Row]]. */
   private[graft] def processBatch(
       batch: DataFrame, batchId: Long, caches: PriorCaches,
-      storeDir: String, ledgerDir: String, budget: Int, shardCol: String,
-      idCol: String, threshold: Double, minMatches: Int,
-      indexDir: Option[String], vecCol: String,
-      shardRoot: Option[String] = None,
-      indexRoot: Option[String] = None,
+      stores: Stores, ledgerDir: String, budget: Int, shardCol: String,
+      idCol: String, threshold: Double, minMatches: Int, vecCol: String,
       packSkew: Option[Boolean] = None,
-      routeLog: Option[RouteLog] = None,
-      ledgerLog: Option[LedgerLog] = None): Unit = {
+      log: Option[DrainLog] = None): Unit = {
     import org.apache.spark.sql.graftglue.GraftGlue
     val sp = batch.sparkSession
     val textCol = caches.textCol
+    val trace = log.map { _ =>
+      val t = new TriggerTrace(sp.sparkContext)
+      sp.sparkContext.addSparkListener(t)
+      t
+    }
+    def staged[A](label: String)(body: => A): A =
+      trace.fold(body)(_.staged(label)(body))
+    try {
     // materialize the trigger's batch ONCE: the tiers below reference
     // it through several plan branches (the exact, near and
     // decontamination tiers each read it), and each un-materialized
@@ -525,9 +582,6 @@ object RefreshPipeline {
     // the upstream is itself stateful (q173 routes a stream-stream join
     // into this chain: every re-run replays the join's state stores;
     // measured 71 s -> join-plus-chain cost once materialized)
-    val tB0 = System.nanoTime()
-    val debug0 = sys.env.contains("GRAFT_RP_DEBUG")
-    val snap0 = if (debug0) TriggerStats.snapshot(sp) else null
     // the exact-tier reference: cached prior fingerprints plus the
     // (tiny) ledger batches of STRICTLY EARLIER triggers — never this
     // trigger's own (see the delivery contract above). Listed BEFORE
@@ -568,9 +622,6 @@ object RefreshPipeline {
             lit(LedgerPrefixSpace.toLong)).cast("int").as("__pp"))))
           .as("__cands"))
       .localCheckpoint(true)
-    if (debug0)
-      println(f"[rp] b$batchId checkpoint ${(System.nanoTime() - tB0) / 1e9}%.2fs rows=${b0.count()}")
-    val tRest = System.nanoTime()
     try {
     // an EMPTY trigger commits nothing. A composed event-time upstream
     // (q173's stream-stream join) appends a watermark-flush no-data
@@ -584,19 +635,10 @@ object RefreshPipeline {
     // fingerprints, and skipping the advance would force the next
     // trigger into a needless rebuild. The observed count makes the
     // probe free.)
-    if (candObs.get("__n").asInstanceOf[Long] == 0L) {
+    val batchRows = candObs.get("__n").asInstanceOf[Long]
+    if (batchRows == 0L) {
       caches.bloom.advanceWith(batchId, Array.empty); return
     }
-    val debug = sys.env.contains("GRAFT_RP_DEBUG")
-    def staged[A](label: String)(body: => A): A =
-      if (!debug) body
-      else {
-        val t0 = System.nanoTime()
-        sp.sparkContext.setJobDescription(label)
-        val a = try body finally sp.sparkContext.setJobDescription(null)
-        println(f"[rp] b$batchId $label ${(System.nanoTime() - t0) / 1e9}%.2fs")
-        a
-      }
     // the exact tier's confirm: the bloom-positive sliver is collected
     // (bounded by the micro-batch contract — fpp x batch + true dups),
     // routed to the index's range partitions via O(partitions) driver
@@ -616,19 +658,6 @@ object RefreshPipeline {
     val confirmPaths: Seq[String] =
       if (cands.isEmpty || earlier.isEmpty) Seq.empty
       else ledgerLeafPaths(earlier, Some(prefixes))
-    // ledger-cost telemetry: the confirm read's actual inputs (paths +
-    // bytes — the O(accepted history) raw term) and the bloom's
-    // cumulative rebuild count, so a long-horizon artifact gates the
-    // amortization claims on observations
-    ledgerLog.foreach { ll =>
-      def bytesOf(f: java.io.File): Long =
-        if (f.isDirectory)
-          Option(f.listFiles()).getOrElse(Array.empty).map(bytesOf).sum
-        else f.length()
-      ll.record(LedgerRow(batchId, earlier.size, confirmPaths.size,
-        confirmPaths.map(p => bytesOf(new java.io.File(p))).sum,
-        caches.bloom.rebuilds))
-    }
     // the two confirm lookups are independent given the candidate set
     // (stable index vs ledger paths) — overlap them on the append
     // carrier (guide §2.6; free before the appends start)
@@ -636,24 +665,23 @@ object RefreshPipeline {
       if (confirmPaths.isEmpty)
         java.util.concurrent.CompletableFuture.completedFuture(
           Array.empty[String])
-      else onAppendCarrier(sp) {
+      else onAppendCarrier(sp) { staged("exactledger") {
         val keys = graft.functions.Utf8SortedKeys.sorted(cands)
         val pfp = sp.read.schema(LedgerSchema).parquet(confirmPaths: _*)
         pfp.filter(GraftGlue.column(
             graft.functions.Utf8InSortedArrayExpr(
               GraftGlue.expression(pfp("__pfp")), keys)))
           .collect().map(_.getString(0))
-      }
+      } }
     val stableHits: Array[String] =
       if (cands.isEmpty) Array.empty
       else staged("exactconfirm") { caches.index.hits(cands) }
-    val ledgerHits: Array[String] = staged("exactledger") {
+    val ledgerHits: Array[String] =
       try ledgerHitsF.get()
       catch {
         case e: java.util.concurrent.ExecutionException =>
           throw e.getCause
       }
-    }
     val allHits = stableHits ++ ledgerHits
     val exactKept =
       if (allHits.isEmpty) Dedup.exact(b0, textCol, idCol)
@@ -699,38 +727,20 @@ object RefreshPipeline {
     // Collision risk only ever mis-ROUTES the pack strategy (outputs
     // are bit-identical either way, the spec-pinned property).
     val obTiers = org.apache.spark.sql.Observation(s"skew-b$batchId")
-    val cleaned = staged("tiers") {
-      val joined = exactKept
-        .join(dropIds, col(idCol) === col("__xid"), "left_anti")
-      val observed =
-        if (packSkew.isEmpty)
-          joined.observe(obTiers, count(lit(1)).as("__t"),
-            collect_list(xxhash64(col(shardCol))).as("__sh"))
-        else joined
-      val ck = observed.localCheckpoint(true)
-      // debug-only plan evidence (GRAFT_RP_PLANS=<dir>): the executed
-      // per-trigger tiers plan — the exact-tier filter, the fused
-      // near ∪ contam anti join, the branch shapes — dumped for ONE
-      // representative micro-batch so per-trigger plan claims are
-      // artifact-verifiable instead of code-readable
-      sys.env.get("GRAFT_RP_PLANS").foreach { d =>
-        if (batchId == 1L) {
-          val f = new java.io.File(d, "trigger_tiers_plan.txt")
-          Option(f.getParentFile).foreach(_.mkdirs())
-          java.nio.file.Files.writeString(f.toPath,
-            observed.queryExecution.explainString(
-              org.apache.spark.sql.execution.ExplainMode
-                .fromString("formatted")))
-          ()
-        }
-      }
-      ck
-    }
+    val joined = exactKept
+      .join(dropIds, col(idCol) === col("__xid"), "left_anti")
+    val tiers =
+      if (packSkew.isEmpty)
+        joined.observe(obTiers, count(lit(1)).as("__t"),
+          collect_list(xxhash64(col(shardCol))).as("__sh"))
+      else joined
+    val cleaned = staged("tiers") { tiers.localCheckpoint(true) }
+    // the executed tiers plan of ONE representative micro-batch (see
+    // DrainLog.tiersPlan), rendered outside the timed stage
+    if (batchId == 1L)
+      log.foreach(_.recordPlan(tiers.queryExecution.explainString(
+        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))))
     try {
-      // generation-managed targets go through StoreRoot, which adds
-      // the cross-generation re-delivery skip (an append at or below
-      // the retention floor was folded by a mid-run compaction) on
-      // top of the per-generation publishOnce skip
       val tokenized = cleaned.withColumn("__ids",
         Bpe.byteTokenIds(col(textCol), BpeByteVocab.merges))
       // the skew-robust pack decision, made WHERE the batch is already
@@ -756,23 +766,13 @@ object RefreshPipeline {
             .map(_.size.toLong).max
         autoPackSkew(hotRows = hot, totalRows = total)
       } }
-      routeLog.foreach(_.record(batchId, skewRobust))
-      def shardAppend(): Unit = staged("shard") { shardRoot match {
-        case Some(r) => StoreRoot.appendShard(sp, r, tokenized,
-          "__ids", idCol, budget, shardCol, version = batchId + 1,
-          skewRobust = skewRobust)
-        case None => ShardSink.append(sp, tokenized,
-          "__ids", idCol, budget, shardCol, storeDir,
-          version = Some(batchId + 1), skewRobust = skewRobust)
-      }; () }
-      def indexAppend(): Unit = staged("index") { indexRoot match {
-        case Some(r) => StoreRoot.appendVectors(sp, r, batchId,
-          cleaned, vecCol, idCol); ()
-        case None => indexDir.foreach { ix =>
-          VectorIndexSink.appendBatch(sp, ix, batchId,
-            cleaned, vecCol, idCol)
-        }
-      } }
+      def shardAppend(): Unit = staged("shard") {
+        stores.appendShard(sp, tokenized, idCol, budget, shardCol, batchId,
+          skewRobust)
+      }
+      def indexAppend(): Unit = staged("index") {
+        stores.appendIndex(sp, batchId, cleaned, vecCol, idCol)
+      }
       // the two store appends are independent of each other (both read
       // only the checkpointed `cleaned`/`tokenized`; idempotence and
       // crash healing hold per store) and only the LEDGER must come
@@ -781,7 +781,7 @@ object RefreshPipeline {
       // scheduling gaps; each trigger's appends are small by the
       // micro-batch contract, so this overlaps driver/planning latency,
       // not executor capacity)
-      if (indexRoot.isDefined || indexDir.isDefined) {
+      if (stores.index.isDefined) {
         val second = onAppendCarrier(sp)(indexAppend())
         // always JOIN the index side before leaving the trigger (no
         // append may outlive its trigger); the first failure wins and
@@ -810,7 +810,6 @@ object RefreshPipeline {
           graft.functions.TextFunctions.fingerprint(col(textCol))
             .as("__pfp"))
         .filter(col("__pfp").isNotNull)
-      var acceptedN = -1L // set by the publish body; -1 = body skipped
       var acceptedArr: Array[String] = null // observed by the write job
       staged("ledger") { StoreFiles.publishOnce(
         s"$ledgerDir/.staging-b$batchId",
@@ -846,7 +845,7 @@ object RefreshPipeline {
             .write.mode("overwrite").parquet(staging)
           val agg = ob.get
           val bitmap = agg("__bits").asInstanceOf[Long]
-          acceptedN = agg("__n").asInstanceOf[Long]
+          val acceptedN = agg("__n").asInstanceOf[Long]
           acceptedArr = agg("__fps").asInstanceOf[Seq[_]]
             .map(_.asInstanceOf[String]).toArray
           if (acceptedN > LedgerSingleFileWarnRows)
@@ -863,7 +862,7 @@ object RefreshPipeline {
       // merge AFTER the ledger publish: a trigger that fails anywhere
       // above leaves the bloom at its pre-trigger state, so the retry
       // references exactly prior ∪ earlier batches again
-      staged("bloomadv") {
+      val accepted = staged("bloomadv") {
         // the ledger write already OBSERVED the accepted fingerprints —
         // fold them into the held bloom driver-side (putString: zero
         // jobs, zero capacity-sized allocation; the DataFrame merge
@@ -875,22 +874,22 @@ object RefreshPipeline {
           if (acceptedArr != null) acceptedArr
           else acceptedFps.collect().map(_.getString(0))
         caches.bloom.advanceWith(batchId, arr)
+        arr.length
+      }
+      for (l <- log; t <- trace) {
+        val (stages, jobs, tasks, taskS) = t.counts()
+        l.recordRow(DrainLog.Row(batchId, batchRows, stages, jobs, tasks,
+          taskS, skewRobust, earlier.size, confirmPaths.size,
+          confirmPaths.map(p =>
+            StoreFiles.listing(new java.io.File(p)).map(_._2).sum).sum,
+          caches.bloom.rebuilds, cands.length.toLong, accepted.toLong))
       }
     } finally
       org.apache.spark.sql.graftglue.GraftGlue
         .releaseCheckpoint(cleaned)
-    } finally {
-      if (debug0) {
-        val s1 = TriggerStats.snapshot(sp)
-        println(f"[rp] b$batchId rest ${(System.nanoTime() - tRest) / 1e9}%.2fs " +
-          s"jobs=${s1._1 - snap0._1} stages=${s1._2 - snap0._2} " +
-          s"tasks=${s1._3 - snap0._3} taskSec=${(s1._4 - snap0._4) / 1e3}")
-        println(s"[rp] b$batchId byDesc " + TriggerStats.descCounts.toSeq
-          .sortBy(-_._2).map { case (k, v) => s"$k=$v" }.mkString(" "))
-        TriggerStats.resetDesc()
-      }
+    } finally
       org.apache.spark.sql.graftglue.GraftGlue.releaseCheckpoint(b0)
-    }
+    } finally trace.foreach(sp.sparkContext.removeSparkListener)
   }
 
   /** Drive a document stream (idCol, shardCol, textCol at minimum)
@@ -910,7 +909,8 @@ object RefreshPipeline {
     * streaming state-store provider for the run (e.g. RocksDB — only
     * meaningful when `docs` composes stateful operators upstream, as
     * q173's stream-stream join does) and restores the previous value
-    * on exit. */
+    * on exit. `log`, when given, receives one [[DrainLog.Row]] per
+    * non-empty trigger. */
   def run(docs: DataFrame, prior: DataFrame, benchmark: DataFrame,
           storeDir: String, ledgerDir: String, checkpointDir: String,
           budget: Int = 2048, shardCol: String = "source",
@@ -921,8 +921,7 @@ object RefreshPipeline {
           vecCol: String = "embedding",
           packSkew: Option[Boolean] = None,
           providerClass: Option[String] = None,
-          routeLog: Option[RouteLog] = None,
-          ledgerLog: Option[LedgerLog] = None): Unit = {
+          log: Option[DrainLog] = None): Unit = {
     // every prior-side derivation is trigger-invariant (the
     // incremental contract references the kept corpus only), so all
     // are computed ONCE here and cached across every trigger — without
@@ -938,10 +937,9 @@ object RefreshPipeline {
         .trigger(Trigger.AvailableNow())
         .option("checkpointLocation", checkpointDir)
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          processBatch(batch, batchId, caches, storeDir, ledgerDir,
-            budget, shardCol, idCol, threshold, minMatches, indexDir,
-            vecCol, packSkew = packSkew, routeLog = routeLog,
-            ledgerLog = ledgerLog)
+          processBatch(batch, batchId, caches,
+            Stores.Dirs(storeDir, indexDir), ledgerDir, budget, shardCol,
+            idCol, threshold, minMatches, vecCol, packSkew, log)
         }
         .start()
       q.awaitTermination()
@@ -1006,7 +1004,10 @@ object RefreshPipeline {
     * rewrite the whole store every cycle and their walls grow with
     * store lifetime; tier folds keep the common (tier-1) cycle's work
     * pinned at k micro-batch deltas no matter how large the store
-    * gets, escalating to a higher tier only every k-th cycle. */
+    * gets, escalating to a higher tier only every k-th cycle.
+    *
+    * `log`, when given, receives the trigger rows as in [[run]] plus
+    * every fold event of the queue. */
   def runManaged(docs: DataFrame, prior: DataFrame, benchmark: DataFrame,
                  shardRoot: String, ledgerDir: String,
                  checkpointDir: String, compactEvery: Int,
@@ -1018,10 +1019,8 @@ object RefreshPipeline {
                  vecCol: String = "embedding",
                  packSkew: Option[Boolean] = None,
                  providerClass: Option[String] = None,
-                 routeLog: Option[RouteLog] = None,
-                 foldLog: Option[FoldLog] = None,
                  tierFanout: Option[Int] = None,
-                 ledgerLog: Option[LedgerLog] = None): Unit = {
+                 log: Option[DrainLog] = None): Unit = {
     require(compactEvery >= 1,
       s"compactEvery must be >= 1: $compactEvery")
     require(tierFanout.forall(_ >= 2),
@@ -1052,15 +1051,9 @@ object RefreshPipeline {
     def finishReady(force: Boolean): Unit =
       pending.keys.toSeq.foreach { r =>
         if (force || pending(r).isDone) {
-          val tF = System.nanoTime()
           val tier = pending(r).tier
           StoreRoot.finishCompact(pending(r))
-          if (sys.env.contains("GRAFT_RP_DEBUG"))
-            println(f"[rp] fold $r tier=$tier wall " +
-              f"${(tF - foldT0(r)) / 1e9}%.2fs " +
-              f"finish ${(System.nanoTime() - tF) / 1e9}%.2fs " +
-              f"forced=$force")
-          foldLog.foreach(_.record(
+          log.foreach(_.record(
             if (force) "finished-forced" else "finished", r, -1L,
             wallS = (System.nanoTime() - foldT0(r)) / 1e9, tier = tier))
           pending.remove(r); ()
@@ -1075,9 +1068,9 @@ object RefreshPipeline {
           case Some(f) =>
             pending(r) = f
             foldT0(r) = System.nanoTime()
-            foldLog.foreach(_.record("begun", r, -1L, tier = f.tier))
+            log.foreach(_.record("begun", r, -1L, tier = f.tier))
           case None =>
-            foldLog.foreach(_.record("noop", r, -1L))
+            log.foreach(_.record("noop", r, -1L))
         }
       }
     var q: org.apache.spark.sql.streaming.StreamingQuery = null
@@ -1087,17 +1080,15 @@ object RefreshPipeline {
         .option("checkpointLocation", checkpointDir)
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           val sp = batch.sparkSession
-          processBatch(batch, batchId, caches, storeDir = "", ledgerDir,
-            budget, shardCol, idCol, threshold, minMatches,
-            indexDir = None, vecCol, shardRoot = Some(shardRoot),
-            indexRoot = indexRoot, packSkew = packSkew,
-            routeLog = routeLog, ledgerLog = ledgerLog)
+          processBatch(batch, batchId, caches,
+            Stores.Roots(shardRoot, indexRoot), ledgerDir, budget, shardCol,
+            idCol, threshold, minMatches, vecCol, packSkew, log)
           finishReady(force = false)
           if ((batchId + 1) % compactEvery == 0) {
             // depth > 0 at a scheduled point = the previous point's
             // cycles are still in flight or owed — an observed fold
             // OVERRUN (the queue defers them, never skips)
-            foldLog.foreach(_.record("point", "", batchId,
+            log.foreach(_.record("point", "", batchId,
               depth = pending.size + owed.size))
             // one owed entry per root per compaction point (a root
             // already queued keeps its place; a root mid-fold gets its
@@ -1113,7 +1104,7 @@ object RefreshPipeline {
                 case None => StoreRoot.beginCompactShard(sp, shardRoot,
                   shardCol)
               }))
-            else foldLog.foreach(_.record("held-place", shardRoot,
+            else log.foreach(_.record("held-place", shardRoot,
               batchId))
             indexRoot.foreach { r =>
               if (!owed.exists(_._1 == r))
@@ -1123,7 +1114,7 @@ object RefreshPipeline {
                       fanout = k)
                   case None => StoreRoot.beginCompactVectors(sp, r)
                 }))
-              else foldLog.foreach(_.record("held-place", r, batchId))
+              else log.foreach(_.record("held-place", r, batchId))
             }
           }
           beginNextOwed()

@@ -333,7 +333,7 @@ object StoreRoot {
     * goes through [[finishCompact]], so a caller can cheaply drain
     * finished folds at every trigger boundary and block only when it
     * must. `tier` is -1 for generation folds, the run's tier for tier
-    * folds (telemetry — [[RefreshPipeline.FoldLog]] gates per-tier
+    * folds (telemetry — [[RefreshPipeline.DrainLog]] gates per-tier
     * fold walls on it). */
   final class Fold private[StoreRoot](
       private[StoreRoot] val root: String,

@@ -22,7 +22,7 @@ import graft.streaming.RefreshPipeline
   * never MEASURED over a long horizon the way REFRESH_OVERRUN measured
   * fold throughput. This main drives the full refresh chain over 150+
   * triggers (3x the longest committed slope artifact) with
-  * [[RefreshPipeline.LedgerLog]] recording, per trigger, the confirm
+  * a [[RefreshPipeline.DrainLog]] recording, per trigger, the confirm
   * read's actual path count and bytes and the bloom's cumulative
   * rebuild count, and gates IN-RUN:
   *
@@ -75,9 +75,9 @@ object LedgerHorizon {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val passes = (1 to scaleRuns).map { i =>
-      val ll = new RefreshPipeline.LedgerLog
+      val ll = new RefreshPipeline.DrainLog
       val r = RefreshScale.run(spark, prior, triggers, batchRows,
-        ledgerLog = Some(ll))
+        log = Some(ll))
       RefreshScale.check(r, requireFlatness = false)
       val rows = ll.rows
       require(rows.nonEmpty, "ledger log captured nothing")

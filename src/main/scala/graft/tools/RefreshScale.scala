@@ -207,9 +207,8 @@ object RefreshScale {
           stateful: Boolean = false,
           providerClass: Option[String] = None,
           managed: Option[Int] = None,
-          foldLog: Option[RefreshPipeline.FoldLog] = None,
           tierFanout: Option[Int] = None,
-          ledgerLog: Option[RefreshPipeline.LedgerLog] = None)
+          log: Option[RefreshPipeline.DrainLog] = None)
       : Result = {
     require(prior >= 100 && triggers >= 2 && batchRows >= 20 &&
       batchRows % 20 == 0,
@@ -277,7 +276,7 @@ object RefreshScale {
         // pack-route telemetry: which triggers the auto-probe (or the
         // forced packSkew) sent through the skew-robust pack — the
         // REFRESH_SKEW artifact gates on this directly
-        val routeLog = new RefreshPipeline.RouteLog
+        val drainLog = log.getOrElse(new RefreshPipeline.DrainLog)
         val tDrain = System.nanoTime()
         try managed match {
           case Some(ce) =>
@@ -287,14 +286,13 @@ object RefreshScale {
               checkpointDir = s"$base/ck", compactEvery = ce,
               indexRoot = Some(s"$base/ixRoot"),
               packSkew = packSkew, providerClass = providerClass,
-              routeLog = Some(routeLog), foldLog = foldLog,
-              tierFanout = tierFanout, ledgerLog = ledgerLog)
+              tierFanout = tierFanout, log = Some(drainLog))
           case None =>
             RefreshPipeline.run(stream, d, bench,
               storeDir = s"$base/store", ledgerDir = s"$base/ledger",
               checkpointDir = s"$base/ck", indexDir = Some(s"$base/ix"),
               packSkew = packSkew, providerClass = providerClass,
-              routeLog = Some(routeLog), ledgerLog = ledgerLog)
+              log = Some(drainLog))
         }
         finally {
           // progress events are delivered async; give the bus a moment
@@ -389,7 +387,7 @@ object RefreshScale {
                   .currentDir(s"$base/shardRoot")
                 case None => s"$base/store"
               })),
-            skewRoutedTriggers = routeLog.routes.count(_._2).toLong)
+            skewRoutedTriggers = drainLog.rows.count(_.skewRobust).toLong)
         } finally
           org.apache.spark.sql.graftglue.GraftGlue
             .releaseCheckpoint(expected)
@@ -398,10 +396,7 @@ object RefreshScale {
     } finally {
       org.apache.spark.sql.graftglue.GraftGlue.releaseCheckpoint(d)
       org.apache.spark.sql.graftglue.GraftGlue.releaseCheckpoint(bench)
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(base.toFile)
+      graft.streaming.StoreFiles.deleteRec(base.toFile)
     }
   }
 

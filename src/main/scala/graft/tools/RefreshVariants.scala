@@ -40,7 +40,7 @@ import graft.streaming.RefreshPipeline
   *     the fold-throughput falsification — compaction scheduled every
   *     trigger so folds MUST overrun their window; gates that the
   *     owed queue defers-then-drains and the drain stays flat, on
-  *     observed [[graft.streaming.RefreshPipeline.FoldLog]] events.
+  *     observed [[graft.streaming.RefreshPipeline.DrainLog]] fold events.
   *
   * Deliberately NOT bench rows (24-trigger 480k-doc drains); same
   * rationale as [[RefreshScale]].
@@ -280,7 +280,7 @@ object RefreshVariants {
       // point EVERY trigger (compactEvery=1: two roots' folds
       // serialized per point, each fold spanning one-to-several
       // triggers at this scale, so successive points MUST arrive
-      // mid-cycle), then gate on observed FoldLog events — not wall
+      // mid-cycle), then gate on observed DrainLog fold events — not wall
       // inference: at least one point saw in-flight/owed depth > 0
       // (the overrun), every begun fold finished (the queue drained),
       // and the drain stayed flat (max/median post-warmup trigger
@@ -290,9 +290,9 @@ object RefreshVariants {
       // identical, walls element-wise min (host-steal discipline).
       val ce = 1
       val passes = (1 to scaleRuns).map { i =>
-        val fl = new RefreshPipeline.FoldLog
+        val fl = new RefreshPipeline.DrainLog
         val r = RefreshScale.run(spark, prior, triggers, batchRows,
-          managed = Some(ce), foldLog = Some(fl))
+          managed = Some(ce), log = Some(fl))
         RefreshScale.check(r, requireFlatness = false)
         println(f"[refreshvariants] overrun pass $i/$scaleRuns " +
           f"drain=${r.drainWallS}%.1fs gen=${r.genAfterDrain} " +
@@ -316,7 +316,7 @@ object RefreshVariants {
         f"a trigger stalled at $maxW%.1fs vs median $medW%.1fs (> 2x) " +
           "under forced fold overruns - deferral is NOT keeping the " +
           "fold off the critical path")
-      def flJson(fl: RefreshPipeline.FoldLog): String = {
+      def flJson(fl: RefreshPipeline.DrainLog): String = {
         val walls = fl.events.filter(_.kind.startsWith("finished"))
           .map(e => f"${e.wallS}%.2f")
         s"""{"points":${fl.events.count(_.kind == "point")},""" +
@@ -333,7 +333,7 @@ object RefreshVariants {
         s"""{"recipe":"$triggers-trigger runManaged drain with a """ +
           s"""compaction point EVERY trigger (compactEvery=1, shard """ +
           s"""+ index roots, folds serialized one-in-flight) so folds """ +
-          s"""MUST overrun their window; gates on observed FoldLog """ +
+          s"""MUST overrun their window; gates on observed DrainLog fold """ +
           s"""events: >=1 overrun per pass, every begun fold """ +
           s"""finished (queue drained), max/median post-warmup """ +
           s"""trigger wall <= 2x, outputs oracle-gated in-run and """ +
@@ -367,7 +367,7 @@ object RefreshVariants {
       // bar the trigger gate also uses); no trigger stalls
       // (max/median <= 2x).
       val horizon = triggers * 3
-      def tier1Walls(fl: RefreshPipeline.FoldLog): Seq[Double] = fl
+      def tier1Walls(fl: RefreshPipeline.DrainLog): Seq[Double] = fl
         .events.filter(e => e.kind.startsWith("finished") && e.tier == 1)
         .map(_.wallS)
       def grow(ws: Seq[Double]): Double =
@@ -377,9 +377,9 @@ object RefreshVariants {
           b.sum / b.size / (a.sum / a.size)
         }
       val passes = (1 to scaleRuns).map { i =>
-        val fl = new RefreshPipeline.FoldLog
+        val fl = new RefreshPipeline.DrainLog
         val r = RefreshScale.run(spark, prior, horizon, batchRows,
-          managed = Some(2), foldLog = Some(fl), tierFanout = Some(4))
+          managed = Some(2), log = Some(fl), tierFanout = Some(4))
         RefreshScale.check(r, requireFlatness = false)
         require(fl.drained,
           s"tiered pass $i: ${fl.begun} folds begun but only " +
@@ -407,9 +407,9 @@ object RefreshVariants {
       }
       // generation-fold context leg (single pass): the O(store)
       // fold-wall growth the tiered machine exists to remove
-      val flG = new RefreshPipeline.FoldLog
+      val flG = new RefreshPipeline.DrainLog
       val gen = RefreshScale.run(spark, prior, horizon, batchRows,
-        managed = Some(2), foldLog = Some(flG))
+        managed = Some(2), log = Some(flG))
       RefreshScale.check(gen, requireFlatness = false)
       require(sameOutputs(Seq(man, gen)),
         "tiered and generation drains diverged - compaction strategy " +
@@ -459,9 +459,9 @@ object RefreshVariants {
       // exactly as it does for generation folds, with the same gates.
       val ce = 1
       val passes = (1 to scaleRuns).map { i =>
-        val fl = new RefreshPipeline.FoldLog
+        val fl = new RefreshPipeline.DrainLog
         val r = RefreshScale.run(spark, prior, triggers, batchRows,
-          managed = Some(ce), foldLog = Some(fl), tierFanout = Some(2))
+          managed = Some(ce), log = Some(fl), tierFanout = Some(2))
         RefreshScale.check(r, requireFlatness = false)
         println(f"[refreshvariants] overrun_tiered pass $i/$scaleRuns " +
           f"drain=${r.drainWallS}%.1fs " +
@@ -482,7 +482,7 @@ object RefreshVariants {
       require(maxW <= 2.0 * medW,
         f"a trigger stalled at $maxW%.1fs vs median $medW%.1fs (> 2x) " +
           "under forced tier-fold overruns")
-      def flJson(fl: RefreshPipeline.FoldLog): String = {
+      def flJson(fl: RefreshPipeline.DrainLog): String = {
         val walls = fl.events.filter(_.kind.startsWith("finished"))
           .map(e => f"""[${e.tier},${e.wallS}%.2f]""")
         s"""{"points":${fl.events.count(_.kind == "point")},""" +

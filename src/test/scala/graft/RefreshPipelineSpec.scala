@@ -33,11 +33,14 @@ class RefreshPipelineSpec extends SparkSpec {
   private def trigger(batch: org.apache.spark.sql.DataFrame,
                       batchId: Long, caches: RefreshPipeline.PriorCaches,
                       base: java.nio.file.Path,
-                      indexDir: Option[String] = None): Unit =
+                      indexDir: Option[String] = None,
+                      packSkew: Option[Boolean] = None,
+                      log: Option[RefreshPipeline.DrainLog] = None): Unit =
     RefreshPipeline.processBatch(batch, batchId, caches,
-      s"$base/store", s"$base/ledger", budget = 16,
+      RefreshPipeline.Stores.Dirs(s"$base/store", indexDir),
+      s"$base/ledger", budget = 16,
       shardCol = "source", idCol = "doc_id", threshold = 0.8,
-      minMatches = 2, indexDir = indexDir, vecCol = "embedding")
+      minMatches = 2, vecCol = "embedding", packSkew = packSkew, log = log)
 
   test("a re-delivered trigger whose ledger batch already published " +
       "(the post-commit crash window) keeps its docs: no self-masking") {
@@ -471,40 +474,182 @@ class RefreshPipelineSpec extends SparkSpec {
     // 22 = the 24 the bloom + index exact tier ran when it became
     // processBatch's only path, less the two parquet schema-inference
     // jobs the ledger reads ran before they declared the ledger schema
-    val base = java.nio.file.Files.createTempDirectory("graft_rpj_")
+    // (trigger 1's jobs on a fresh base, with or without a DrainLog)
+    def pinnedTrigger(log: Option[RefreshPipeline.DrainLog]): Int = {
+      val base = java.nio.file.Files.createTempDirectory("graft_rpj_")
+      try {
+        val emb = transform(sequence(lit(0), lit(7)),
+          i => sin(col("doc_id") * 3 + i).cast("float"))
+        val prior = docsDF(
+          (1L, "a", "alpha bravo charlie delta"),
+          (2L, "b", "echo foxtrot golf hotel"),
+          (3L, "a", "mike november oscar papa"),
+          (4L, "b", "quebec romeo sierra tango"))
+        ShardSink.append(spark,
+          prior.withColumn("__ids",
+            Bpe.byteTokenIds(col("text"), BpeByteVocab.merges)),
+          "__ids", "doc_id", 16, "source", s"$base/store")
+        Similarity.ivfPqSave(
+          Similarity.ivfPqBuild(prior.withColumn("embedding", emb),
+            nLists = 2, m = 2, kCodes = 4, iterations = 2,
+            idCol = "doc_id"),
+          s"$base/ix")
+        withCaches(prior, prior.limit(0)) { caches =>
+          def crossTrigger(batch: org.apache.spark.sql.DataFrame,
+                           id: Long): Unit =
+            trigger(batch.withColumn("embedding", emb), id, caches, base,
+              indexDir = Some(s"$base/ix"), log = log)
+          crossTrigger(docsDF((9L, "a", "india juliet kilo lima"),
+            (10L, "b", "alpha bravo charlie delta")), 0L)
+          val (_, jobs) = jobsOf(crossTrigger(docsDF(
+            (11L, "a", "india juliet kilo lima"),
+            (12L, "b", "uniform victor whiskey xray"),
+            (13L, "a", "echo foxtrot golf hotel")), 1L))
+          val ledgered = spark.read.parquet(s"$base/ledger/b1").count()
+          assert(ledgered == 1L,
+            s"trigger 1 accepted $ledgered fps, want only the fresh doc")
+          jobs
+        }
+      } finally rmTree(base)
+    }
+    val jobs = pinnedTrigger(None)
+    assert(jobs == 22, s"trigger 1 ran $jobs Spark jobs, want 22")
+    // the same two triggers on a second base with a DrainLog attached:
+    // the log adds no job, its batch-1 row counts the same 22 (every
+    // job of the trigger's group, the append carrier's included), and
+    // it times all eight labelled stages
+    val log = new RefreshPipeline.DrainLog
+    val logged = pinnedTrigger(Some(log))
+    assert(logged == 22,
+      s"with a DrainLog trigger 1 ran $logged Spark jobs, want 22")
+    val row = log.rows.find(_.batchId == 1L)
+    assert(row.map(_.jobs).contains(22), s"batch-1 row: $row")
+    assert(row.map(_.stages.keySet).contains(Set("exactconfirm",
+      "exactledger", "tiers", "skewprobe", "shard", "index", "ledger",
+      "bloomadv")), s"batch-1 stages: ${row.map(_.stages)}")
+    assert(row.exists(r => r.tasks > 0L &&
+      r.stages.values.map(_.jobs).sum <= r.jobs), s"batch-1 row: $row")
+  }
+
+  test("DrainLog rows over three unbroken triggers: one bloom rebuild, " +
+      "the confirm read of a re-sent accept, the pack route and the " +
+      "sizes of the two driver collects") {
+    val base = java.nio.file.Files.createTempDirectory("graft_rpd_")
     try {
-      val emb = transform(sequence(lit(0), lit(7)),
-        i => sin(col("doc_id") * 3 + i).cast("float"))
-      val prior = docsDF(
-        (1L, "a", "alpha bravo charlie delta"),
-        (2L, "b", "echo foxtrot golf hotel"),
-        (3L, "a", "mike november oscar papa"),
-        (4L, "b", "quebec romeo sierra tango"))
+      val prior = docsDF((1L, "a", "alpha bravo charlie delta"))
       ShardSink.append(spark,
         prior.withColumn("__ids",
           Bpe.byteTokenIds(col("text"), BpeByteVocab.merges)),
         "__ids", "doc_id", 16, "source", s"$base/store")
-      Similarity.ivfPqSave(
-        Similarity.ivfPqBuild(prior.withColumn("embedding", emb),
-          nLists = 2, m = 2, kCodes = 4, iterations = 2,
-          idCol = "doc_id"),
-        s"$base/ix")
+      val log = new RefreshPipeline.DrainLog
       withCaches(prior, prior.limit(0)) { caches =>
-        def crossTrigger(batch: org.apache.spark.sql.DataFrame,
-                         id: Long): Unit =
-          trigger(batch.withColumn("embedding", emb), id, caches, base,
-            indexDir = Some(s"$base/ix"))
-        crossTrigger(docsDF((9L, "a", "india juliet kilo lima"),
-          (10L, "b", "alpha bravo charlie delta")), 0L)
-        val (_, jobs) = jobsOf(crossTrigger(docsDF(
-          (11L, "a", "india juliet kilo lima"),
-          (12L, "b", "uniform victor whiskey xray"),
-          (13L, "a", "echo foxtrot golf hotel")), 1L))
-        assert(jobs == 22, s"trigger 1 ran $jobs Spark jobs, want 22")
-        val ledgered = spark.read.parquet(s"$base/ledger/b1").count()
-        assert(ledgered == 1L,
-          s"trigger 1 accepted $ledgered fps, want only the fresh doc")
+        trigger(docsDF(
+          (5L, "a", "echo foxtrot golf hotel"),
+          (6L, "b", "india juliet kilo lima")), 0L, caches, base,
+          log = Some(log))
+        // trigger 1 re-sends trigger 0's first accept
+        trigger(docsDF(
+          (7L, "a", "echo foxtrot golf hotel"),
+          (8L, "b", "mike november oscar papa")), 1L, caches, base,
+          log = Some(log))
+        // trigger 2 forces the skew-robust pack
+        trigger(docsDF((9L, "a", "quebec romeo sierra tango")), 2L,
+          caches, base, packSkew = Some(true), log = Some(log))
       }
+      val rows = log.rows
+      assert(rows.map(r => (r.batchId, r.batchRows)) ==
+        Seq((0L, 2L), (1L, 2L), (2L, 1L)), rows)
+      // an unbroken drain rebuilds the bloom once, on trigger 0
+      assert(rows.forall(_.bloomRebuilds == 1L), rows)
+      assert(rows.map(_.earlierBatches) == Seq(0, 1, 2), rows)
+      assert(rows(1).confirmPaths >= 1 && rows(1).confirmBytes > 0L &&
+        rows(1).candidates >= 1L, rows(1))
+      // below AutoPackSkewFloor the auto-probe keeps the window pack;
+      // an explicit packSkew wins
+      assert(rows.map(_.skewRobust) == Seq(false, false, true), rows)
+      // accepted = the ledger batch's fingerprint count
+      assert(rows.map(_.accepted) == Seq(2L, 1L, 1L), rows)
+      assert(log.tiersPlan.exists(_.contains("Physical Plan")),
+        log.tiersPlan)
+    } finally rmTree(base)
+  }
+
+  test("a DrainLog row counts only the trigger's own job group: jobs " +
+      "another group runs meanwhile, as a fold does, are left out") {
+    val base = java.nio.file.Files.createTempDirectory("graft_rpg_")
+    try {
+      val prior = docsDF((1L, "a", "alpha bravo charlie delta"))
+      ShardSink.append(spark,
+        prior.withColumn("__ids",
+          Bpe.byteTokenIds(col("text"), BpeByteVocab.merges)),
+        "__ids", "doc_id", 16, "source", s"$base/store")
+      // a thread launching jobs in a job group of its own, from before
+      // the trigger starts until after it ends
+      val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
+      val started = new java.util.concurrent.CountDownLatch(1)
+      val noise = new Thread(() => {
+        spark.sparkContext.setJobGroup("graft-noise", "noise")
+        while (!stop.get) { spark.range(8).count(); started.countDown() }
+      })
+      val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+          groups.add(Option(j.properties)
+            .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+            .getOrElse("")); ()
+        }
+      }
+      val log = new RefreshPipeline.DrainLog
+      withCaches(prior, prior.limit(0)) { caches =>
+        noise.start()
+        started.await()
+        spark.sparkContext.addSparkListener(listener)
+        try trigger(docsDF(
+            (5L, "a", "echo foxtrot golf hotel"),
+            (6L, "b", "india juliet kilo lima")), 0L, caches, base,
+            log = Some(log))
+        finally {
+          org.apache.spark.sql.graftglue.GraftGlue
+            .drainListenerBus(spark.sparkContext)
+          spark.sparkContext.removeSparkListener(listener)
+          stop.set(true)
+          noise.join()
+        }
+      }
+      import scala.jdk.CollectionConverters._
+      val all = groups.asScala.toSeq
+      val own = all.count(_ != "graft-noise")
+      assert(own > 0 && all.size > own,
+        s"no job of the other group overlapped the trigger: $all")
+      assert(log.rows.map(_.jobs) == Seq(own), log.rows)
+    } finally rmTree(base)
+  }
+
+  test("a DrainLog on a streamed run gets a row per trigger under the " +
+      "streaming engine's job group") {
+    val base = java.nio.file.Files.createTempDirectory("graft_rps_")
+    try {
+      val prior = docsDF((1L, "a", "alpha bravo charlie delta"))
+      ShardSink.append(spark,
+        prior.withColumn("__ids",
+          Bpe.byteTokenIds(col("text"), BpeByteVocab.merges)),
+        "__ids", "doc_id", 16, "source", s"$base/store")
+      StagedDrops.stageAll(Seq(
+        docsDF((5L, "a", "echo foxtrot golf hotel"),
+          (6L, "b", "india juliet kilo lima")),
+        docsDF((7L, "a", "echo foxtrot golf hotel"),
+          (8L, "b", "mike november oscar papa"))), s"$base/in")
+      val log = new RefreshPipeline.DrainLog
+      RefreshPipeline.run(StagedDrops.open(spark, s"$base/in"), prior,
+        prior.limit(0), s"$base/store", s"$base/ledger", s"$base/ck",
+        budget = 16, log = Some(log))
+      assert(log.rows.map(_.batchId) == Seq(0L, 1L), log.rows)
+      // the carrier-run confirm read of trigger 1 counts in its group
+      assert(log.rows.forall(r => r.jobs > 0 &&
+        r.stages.values.map(_.jobs).sum <= r.jobs), log.rows)
+      assert(log.rows(1).stages.get("exactledger").exists(_.jobs > 0),
+        log.rows)
     } finally rmTree(base)
   }
 

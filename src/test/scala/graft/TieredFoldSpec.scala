@@ -309,11 +309,11 @@ class TieredFoldSpec extends SparkSpec {
         Similarity.ivfPqBuild(prior.withColumn("embedding", emb),
           vecCol = "embedding", idCol = "doc_id", nLists = 2, m = 4,
           kCodes = 8, iterations = 2), StoreRoot.init(iRoot))
-      val fl = new RefreshPipeline.FoldLog
+      val fl = new RefreshPipeline.DrainLog
       RefreshPipeline.runManaged(stream("inB"), prior, benchmark,
         shardRoot = sRoot, ledgerDir = s"$base/ledgerB",
         checkpointDir = s"$base/ckB", compactEvery = 1, budget = 512,
-        indexRoot = Some(iRoot), foldLog = Some(fl),
+        indexRoot = Some(iRoot), log = Some(fl),
         tierFanout = Some(2))
       // tier folds never swap generations; the answers are identical
       assert(StoreRoot.currentGen(sRoot) == 0L &&
